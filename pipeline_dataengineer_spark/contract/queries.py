@@ -16,6 +16,7 @@ Determinism rules applied throughout (SURVEY.md §7 risks):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -44,6 +45,16 @@ def query(name: str):
         return fn
 
     return deco
+
+
+def _scratch_path(*parts: str) -> str:
+    """A path under the application's scratch root
+    (``SparkFiles.getRootDirectory()``, inside ``SPARK_LOCAL_DIRS``),
+    which Spark deletes when the application stops. Builders that
+    stage files write there, so concurrent runs never share them."""
+    from pyspark import SparkFiles
+
+    return os.path.join(SparkFiles.getRootDirectory(), *parts)
 
 
 # --------------------------------------------------------------- scans
@@ -575,8 +586,9 @@ def q_minhash_neardup(spark, sf_dir):
     # Signatures spill to a parquet stage table (the 100-TB path, and
     # also the measured-faster one at sf0.1: cold 12.4s→5.0s, warm
     # 3.4s→2.8s — each downstream leg column-prunes the scan, which
-    # the all-columns memory cache cannot). Fixed overwrite path →
-    # idempotent, no tmp accumulation across runs.
+    # the all-columns memory cache cannot). Overwrite path inside the
+    # application's own scratch root → idempotent within a run, no
+    # tmp accumulation across runs, no stage shared between runs.
     pairs = minhash_lsh_near_duplicates(
         corpus,
         "doc_id",
@@ -585,7 +597,7 @@ def q_minhash_neardup(spark, sf_dir):
         bands=8,
         shingle_n=5,
         jaccard_threshold=0.7,
-        signature_stage_path="/tmp/spark_graft_stage/minhash_sig",
+        signature_stage_path=_scratch_path("spark_graft_stage", "minhash_sig"),
     )
     return pairs.orderBy("id_a", "id_b")
 
@@ -6895,7 +6907,6 @@ def q_vector_index(spark, sf_dir):
     oracle-checked piecewise by q_ivfpq_exact / q_countmin-style
     lossless configs and the pipeline pytest asserts self-retrieval
     at distance zero."""
-    import os
     import shutil
 
     from pipeline_dataengineer_spark.pipelines.vector_index import (
@@ -6905,9 +6916,11 @@ def q_vector_index(spark, sf_dir):
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = f"/tmp/spark_graft_vecidx_{os.path.basename(sf_dir.rstrip('/'))}"
-    # fresh root per run: repeated bench/verify invocations would
-    # otherwise accumulate snapshot versions in /tmp without bound
+    root = _scratch_path(
+        f"spark_graft_vecidx_{os.path.basename(sf_dir.rstrip('/'))}"
+    )
+    # fresh root per build: repeated builds in one application would
+    # otherwise accumulate snapshot versions without bound
     shutil.rmtree(root, ignore_errors=True)
     build_vector_index(
         d, root, chunk_tokens=48, overlap=8, dim=32,
@@ -10167,54 +10180,16 @@ def q_pruned_read(spark, sf_dir):
     table, which is exactly what the oracle checks. The pruning
     effectiveness itself (files actually dropped) is pytest-pinned;
     this query proves the cut loses no rows."""
-    import os
-
     from pipeline_dataengineer_spark.sources.parquet_meta import (
         read_pruned,
     )
 
-    # per-process suffix: two concurrent runs on the same tier (e.g.
-    # bench + verify_local) must not overwrite each other's files
-    # mid-read (round-7 ADVICE); same-process re-runs stay idempotent.
-    # The suffix means every process leaves a dir behind (round-9
-    # ADVICE: unbounded /tmp growth) — the result is a LAZY read over
-    # the files so we cannot delete in-function; instead reap dirs
-    # whose owning PID is dead, and atexit-remove our own.
-    import atexit
-    import glob
-    import shutil
-    import time
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    for stale in glob.glob(f"/tmp/spark_graft_pruned_{tag}_*"):
-        pid_s = stale.rsplit("_", 1)[-1]
-        if not pid_s.isdigit() or pid_s == str(os.getpid()):
-            continue
-        dead = False
-        try:
-            os.kill(int(pid_s), 0)  # raises if the process is gone
-        except ProcessLookupError:
-            dead = True
-        except (OSError, OverflowError):
-            # PermissionError (alive under another uid), EINVAL, or an
-            # out-of-range numeric suffix (OverflowError from os.kill
-            # on a crafted dir name — round-10 ADVICE: must not fail
-            # the whole query): not proven dead by the probe.
-            pass
-        if not dead:
-            # mtime-age fallback (round-10 ADVICE): a recycled PID now
-            # owned by an unrelated live process would otherwise pin
-            # the dir forever. Any legitimate owner is a bench/verify
-            # run measured in minutes; a day-old dir is garbage.
-            try:
-                age = time.time() - os.path.getmtime(stale)
-            except OSError:
-                continue
-            dead = age > 86_400
-        if dead:
-            shutil.rmtree(stale, ignore_errors=True)
-    out = f"/tmp/spark_graft_pruned_{tag}_{os.getpid()}"
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    # Inside the application's own scratch root: two concurrent runs
+    # on the same tier (e.g. bench + verify_local) never share the
+    # files, and the directory goes when the application stops — the
+    # result is a LAZY read over the files, so it cannot be deleted
+    # here. Same-application re-runs overwrite it.
+    out = _scratch_path(f"spark_graft_pruned_{os.path.basename(sf_dir.rstrip('/'))}")
     (
         table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")

@@ -97,7 +97,8 @@ def global_row_index(
     if n_parts_total == 0:  # empty input: no rows ever evaluate this
         return with_mid.withColumn(index_col, local_idx).drop("__mid")
     if n_parts_total <= 1024:
-        off_arr = F.array(*[F.lit(off) for off in dense])
+        # bigint elements: the literal type must not flip at 2^31
+        off_arr = F.array(*[F.lit(off).cast("long") for off in dense])
         return with_mid.withColumn(
             index_col, local_idx + F.element_at(off_arr, pid + 1)
         ).drop("__mid")

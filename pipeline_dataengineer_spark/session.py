@@ -18,6 +18,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds pipeline_dataengineer_spark
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     """Local parallelism: $SPARK_GRAFT_CPUS, else machine cores."""
@@ -37,11 +40,14 @@ def get_spark(
     1000-executor scale except the master itself.
     """
     cpus = cpus or default_parallelism()
-    # $SPARK_GRAFT_SHUFFLE_PARTITIONS pins BOTH the static count and
+    # An explicit ``shuffle_partitions`` (else
+    # $SPARK_GRAFT_SHUFFLE_PARTITIONS) pins BOTH the static count and
     # the AQE initial count (kept for A/B experiments; round-10's
     # sf10 spot tier used it to prove the spill diagnosis).
-    env_parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0"))
-    shuffle_partitions = shuffle_partitions or env_parts or cpus
+    pinned_parts = shuffle_partitions or int(
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
+    )
+    shuffle_partitions = pinned_parts or cpus
     # Input-aware shuffle sizing (round-11, guide §2.2/§5 — VERDICT
     # r10 item 3): AQE coalescing can MERGE small partitions but can
     # never SPLIT big ones, so the cores-sized static count silently
@@ -66,7 +72,7 @@ def get_spark(
     # 4-rep idle mins). Stays well under the 2000-partition
     # HighlyCompressedMapStatus cliff. On a real cluster the same
     # formula scales with executor count.
-    initial_partitions = env_parts or max(8 * cpus, 256)
+    initial_partitions = pinned_parts or max(8 * cpus, 256)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -86,6 +92,10 @@ def get_spark(
         # Arrow transfer for pandas UDF / createDataFrame(pandas).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Python workers import this package from where it lives, not
+        # from the caller's working directory (Arrow UDFs unpickle
+        # functions defined in it).
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
     for k, v in extra_conf.items():

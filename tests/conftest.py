@@ -12,7 +12,7 @@ from pipeline_dataengineer_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=4, shuffle_partitions=4)
+    s = get_spark("tests", cpus=4)
     yield s
 
 

@@ -73,3 +73,16 @@ def test_deterministic_shuffle_layout_independent(spark):
     # it is a permutation of 0..n-1, and not the identity
     assert sorted(a.values()) == list(range(200))
     assert [a[i] for i in range(200)] != list(range(200))
+
+
+def test_global_row_index_offsets_are_bigint(spark):
+    """The dense offset array is array<bigint> at any size, so neither
+    it nor the index column changes type when offsets pass 2^31."""
+    import re
+
+    df = spark.range(100).select(F.col("id"), (F.col("id") * 7 % 13).alias("v"))
+    out = global_row_index(df, ["v", "id"], "idx", num_partitions=3)
+    assert out.schema["idx"].dataType.typeName() == "long"
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert re.search(r"element_at\(array\(cast\(0 as bigint\)(, cast\(\d+ as bigint\))*\)", plan), plan
+    assert sorted(r["idx"] for r in out.collect()) == list(range(100))
