@@ -18,6 +18,11 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Largest cached pair table (Catalyst's sizeInBytes of the in-memory
+# relation) that minhash_lsh_near_duplicates broadcasts into both
+# verify legs.
+_PAIR_BROADCAST_MAX_BYTES = 100 << 20
+
 
 def dedup_exact(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Exact dedup on a key set (or whole row). `dropDuplicates` is a
@@ -413,9 +418,12 @@ def minhash_lsh_near_duplicates(
         #    unshuffled signature scan and only PAIR-sized array
         #    rows cross the final pair-keyed join — the heavy bytes
         #    move once. sf10 spot: ratio 6.84 → 4.57.
-        # 3. Both big (pair count past the ~100 MB broadcast bound):
-        #    the corpus-shuffling shape returns — it degrades
-        #    gracefully where a giant broadcast would OOM.
+        # 3. Both big (the cached pair table past the ~100 MB
+        #    broadcast bound, _PAIR_BROADCAST_MAX_BYTES): the
+        #    corpus-shuffling shape returns — it degrades gracefully
+        #    where a giant broadcast would OOM. The bound is on bytes,
+        #    not rows: string ids make a pair many times wider than
+        #    two bigints.
         sig_bytes = None
         if signature_stage_path is not None:
             try:
@@ -431,8 +439,12 @@ def minhash_lsh_near_duplicates(
         else:
             pairs = pairs.persist()
             to_unpersist.append(pairs)
-            n_pairs = pairs.count()
-            if n_pairs <= 5_000_000:
+            pairs.count()
+            # a materialized cache reports its measured bytes
+            pair_bytes = int(
+                pairs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            )
+            if pair_bytes <= _PAIR_BROADCAST_MAX_BYTES:
                 pa = a.join(F.broadcast(pairs), "id_a")
                 pb = b.join(F.broadcast(pairs), "id_b")
                 verified = pa.join(pb, ["id_a", "id_b"])

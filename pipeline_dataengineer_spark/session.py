@@ -10,6 +10,16 @@ shuffle partitions sized to the parallelism actually available
 instead of the 200 default, UTC session timezone so timestamp
 semantics match the DuckDB oracle, Arrow enabled for the
 Pandas-UDF slow path.
+
+Python processes: every Python process Spark launches (UDF daemon and
+workers, the per-query streaming source runner, data-source planner
+runners) gets the package root and ``_worker_site/`` on its path.
+``_worker_site/sitecustomize.py`` moves Spark's bytecode-free
+``pyspark.zip`` and py4j zip behind site-packages when the versions
+match, which halves each fresh process's start-up CPU. The
+``lookup_data_sources`` planner Spark starts for the session itself
+is launched without ``spark.executorEnv.*`` and still imports from
+the zip.
 """
 
 from __future__ import annotations
@@ -20,6 +30,8 @@ from pyspark.sql import SparkSession
 
 # the directory that holds pipeline_dataengineer_spark
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the directory whose sitecustomize.py moves Spark's zips behind site-packages
+_WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_site")
 
 
 def default_parallelism() -> int:
@@ -94,8 +106,13 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # Python workers import this package from where it lives, not
         # from the caller's working directory (Arrow UDFs unpickle
-        # functions defined in it).
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # functions defined in it). _WORKER_SITE's start-up hook lets
+        # them import pyspark and py4j from precompiled site-packages
+        # (see the module docstring).
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join((_PACKAGE_ROOT, _WORKER_SITE)),
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
     for k, v in extra_conf.items():

@@ -26,9 +26,13 @@ value parsing, imposed-schema JSON, foreachBatch idempotent append —
 is identical, which is exactly what the e2e pytest exercises.
 
 Scale notes: one simulated partition (the reference ran a 1-partition
-topic, README:134-138). The offset index is recomputed by listing
-segment files per micro-batch — fine for a loop-back harness; the
-real connector gets this from the broker. Segments are JSON-lines
+topic, README:134-138). There is no offset index: each micro-batch
+lists the segment files and reads the log once, from its first
+record to its end, decoding only the records at or past the batch's
+start offset; the batch's end offset is the one after the last
+record read. A batch therefore reads every segment, old ones
+included — fine for a loop-back harness; the real connector gets
+offsets from the broker. Segments are JSON-lines
 written by Spark itself (``DataFrame.write.json``), so producing is
 distributed — no driver-side collect."""
 
@@ -160,13 +164,12 @@ if _HAS_DATASOURCE_API:
             return {"offset": 0}
 
         def read(self, start: dict):
-            end = _count(self.log_dir)
-            if end <= start["offset"]:
-                return iter([]), start
             # materialized list, not a generator: Spark's prefetch
             # cache copies the iterator, and generators don't copy
-            rows = list(_scan(self.log_dir, self.topic, start["offset"], end))
-            return iter(rows), {"offset": end}
+            rows = list(_scan(self.log_dir, self.topic, start["offset"], None))
+            if not rows:
+                return iter([]), start
+            return iter(rows), {"offset": rows[-1][4] + 1}
 
         def readBetweenOffsets(self, start: dict, end: dict):
             return iter(

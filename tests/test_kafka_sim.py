@@ -77,6 +77,28 @@ def test_starting_offsets_latest_skips_history(spark, topic):
     assert [bytes(t[0]) for t in rows] == [b"F-new"]
 
 
+def test_stream_batch_reads_each_segment_file_once(tmp_path, monkeypatch):
+    from pipeline_dataengineer_spark.sources import kafka_sim
+
+    log = tmp_path / "topic"
+    for seg, keys in enumerate((["F-1", "F-2"], ["F-3"])):
+        (log / f"seg-{seg:08d}").mkdir(parents=True)
+        (log / f"seg-{seg:08d}" / "part-00000.json").write_text(
+            "".join(f'{{"value":"v-{k}","key":"{k}"}}\n' for k in keys)
+        )
+    opened = []
+
+    def counting_open(path, *args, **kwargs):
+        opened.append(os.path.basename(os.path.dirname(path)))
+        return open(path, *args, **kwargs)
+
+    monkeypatch.setattr(kafka_sim, "open", counting_open, raising=False)
+    r = kafka_sim._LogStreamReader({"path": str(log)})
+    rows, nxt = r.read({"offset": 1})
+    assert [bytes(t[0]) for t in rows] == [b"F-2", b"F-3"] and nxt == {"offset": 3}
+    assert sorted(opened) == ["seg-00000000", "seg-00000001"]
+
+
 def test_full_round_trip_with_idempotent_sink(spark, topic, tmp_path):
     """The reference pipeline end to end: JSON-producer payload →
     topic → readStream → imposed-schema parse → foreachBatch

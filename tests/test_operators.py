@@ -645,3 +645,47 @@ def test_make_lag_features_no_leakage(spark):
     # trailing window EXCLUDES current row: mean(10,20,30) at t=4
     assert out[4]["roll3_mean"] == 20.0
     assert out[7]["roll3_min"] == 40.0 and out[7]["roll3_max"] == 60.0
+
+
+def test_minhash_pair_broadcast_gated_on_pair_table_bytes(spark, monkeypatch):
+    """The forced two-sided pair broadcast is gated on the cached pair
+    table's bytes, not its row count: the same pairs with wide string
+    ids cross a bound that bigint ids stay under, take the
+    corpus-shuffling shape, and give the same answer."""
+    from pipeline_dataengineer_spark.operators import dedup
+
+    topics = [
+        "brake hoses on the front axle may crack under sustained load",
+        "the charger casing can overheat when left plugged in overnight",
+        "undeclared peanut traces were found in the chocolate spread jars",
+        "a loose strap lets the child seat tilt forward during hard stops",
+    ]
+    texts = [topics[i % 4] for i in range(24)]
+    wide = "recall-notice-identifier-with-a-long-prefix-"
+
+    def run(ids):
+        docs = spark.createDataFrame(list(zip(ids, texts)), ["doc_id", "text"])
+        out = minhash_lsh_near_duplicates(
+            docs, "doc_id", "text", num_hashes=32, bands=8, jaccard_threshold=0.5
+        )
+        broadcasts = out._jdf.queryExecution().analyzed().toString().count(
+            "strategy=broadcast"
+        )
+        got = sorted(tuple(r) for r in out.collect())
+        out.unpersist()
+        return broadcasts, got
+
+    numeric = list(range(24))
+    strings = [f"{wide}{i:04d}" for i in numeric]
+    # 4 clusters of 6 identical docs: 60 pairs, cached in 960 bytes as
+    # bigints and in about 6 KB as these strings
+    monkeypatch.setattr(dedup, "_PAIR_BROADCAST_MAX_BYTES", 4096)
+    n_bcast, by_int = run(numeric)
+    assert n_bcast == 2 and len(by_int) == 60
+    s_bcast, by_str_shuffled = run(strings)
+    assert s_bcast == 0
+    monkeypatch.setattr(dedup, "_PAIR_BROADCAST_MAX_BYTES", 100 << 20)
+    b_bcast, by_str_broadcast = run(strings)
+    assert b_bcast == 2
+    assert by_str_shuffled == by_str_broadcast
+    assert [(int(a[-4:]), int(b[-4:]), j) for a, b, j in by_str_broadcast] == by_int
