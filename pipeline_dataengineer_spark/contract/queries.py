@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pipeline_dataengineer_spark.catalog import table
-from pipeline_dataengineer_spark.functions.text import merge_columns, strip_accents
+from pipeline_dataengineer_spark.functions.text import merge_columns, sql_literal, strip_accents
 from pipeline_dataengineer_spark.functions.vectors import cosine_similarity
 from pipeline_dataengineer_spark.operators.dedup import (
     dedup_last_wins,
@@ -424,8 +424,8 @@ def q_string_fns(spark, sf_dir):
     accent strip (A6). NULLs are manufactured with CASE so the merge's
     both-null → NULL branch is exercised on real data."""
     c = table(spark, sf_dir, "customer")
-    a = F.when(F.col("c_acctbal") > 0, F.col("c_name"))
-    b = F.when(F.length("c_mktsegment") > 9, F.col("c_mktsegment"))
+    a = "CASE WHEN c_acctbal > 0 THEN c_name END"
+    b = "CASE WHEN length(c_mktsegment) > 9 THEN c_mktsegment END"
     return c.select(
         "c_custkey",
         F.lower("c_mktsegment").alias("seg_lower"),
@@ -433,7 +433,7 @@ def q_string_fns(spark, sf_dir):
         F.regexp_extract("c_name", r"(\d+)", 1).alias("name_num"),
         F.length("c_name").cast("long").alias("name_len"),
         merge_columns(a, b).alias("merged"),
-        strip_accents(F.lit("Épicerie sucrée À l'Île dès l'été")).alias("accent_demo"),
+        strip_accents(sql_literal("Épicerie sucrée À l'Île dès l'été")).alias("accent_demo"),
     )
 
 

@@ -1,10 +1,24 @@
 """Text/string column functions.
 
 Re-expresses the reference's row-level Python transforms
-(``src/kafka_client/transformations.py``) as JVM-side Column
-expressions — one ``select`` projection instead of a per-row dict
-``map``, so whole-stage codegen applies and nothing crosses the
-Python boundary in the hot path.
+(``src/kafka_client/transformations.py``) as JVM-side expressions —
+one ``select`` projection instead of a per-row dict ``map``, so
+whole-stage codegen applies and nothing crosses the Python boundary
+in the hot path.
+
+The four recall transforms (``strip_accents``,
+``normalize_empty_to_null``, ``merge_columns``,
+``split_commercialisation_dates``) are SQL text, and take a column
+name or a SQL expression string; the ``strip_accents`` chain is
+generated once, when the module loads.
+Built as Column calls, every expression node is one py4j round trip:
+``strip_accents`` alone is 35 ``replace`` calls plus a 977-character
+``translate``, and the recall projection took about 8,400 py4j
+commands (1.4 CPU-s) to build. As text the same projection is one
+``selectExpr`` that the JVM parses in a single call. The text parses
+to the same tree whatever ``spark.sql.parser.escapedStringLiterals``
+says: it holds no backslash escape, and any string that is not plain
+printable text goes through :func:`sql_literal`.
 """
 
 from __future__ import annotations
@@ -109,7 +123,65 @@ def _build_translit_maps() -> tuple[str, str, list[tuple[str, str]]]:
 _ACCENT_SRC, _ACCENT_DST, _MULTI = _build_translit_maps()
 
 
-def strip_accents(col: Column | str) -> Column:
+def sql_literal(s: str) -> str:
+    """SQL text for the string ``s`` that holds no escape sequence, so
+    it parses to ``s`` under either setting of
+    ``spark.sql.parser.escapedStringLiterals``: a plain quoted literal
+    when ``s`` is printable and holds no quote or backslash, else the
+    UTF-8 bytes in hex (constant-folded by the optimizer)."""
+    if s.isprintable() and "'" not in s and "\\" not in s:
+        return f"'{s}'"
+    return f"decode(unhex('{s.encode().hex()}'), 'UTF-8')"
+
+
+def _sql_arg(x: object) -> str:
+    if not isinstance(x, str):
+        raise TypeError(
+            f"expected a column name or SQL expression string, got {type(x).__name__}"
+        )
+    return x
+
+
+# The *_sql functions below return the SQL text of a recall transform
+# over the SQL expression text ``x`` (``a``, ``b``); the Column
+# functions after them, and transform_recall_records' selectExpr, use
+# them. translate(replace(...replace(x, 'æ', 'ae')...), src, dst) is
+# _STRIP_HEAD + x + _STRIP_TAIL.
+_STRIP_HEAD = "translate(" + "replace(" * len(_MULTI)
+_STRIP_TAIL = "".join(f", {sql_literal(a)}, {sql_literal(b)})" for a, b in _MULTI) + (
+    f", {sql_literal(_ACCENT_SRC)}, {sql_literal(_ACCENT_DST)})"
+)
+# dd/mm/yyyy with no backslash escape (Java's \d is ASCII-only too)
+_DDMMYYYY = "'([0-9]{2}/[0-9]{2}/[0-9]{4})'"
+
+
+def strip_accents_sql(x: str) -> str:
+    return _STRIP_HEAD + x + _STRIP_TAIL
+
+
+def empty_to_null_sql(x: str) -> str:
+    return f"nullif({x}, '')"
+
+
+def merge_columns_sql(a: str, b: str, sep: str = "\n") -> str:
+    return empty_to_null_sql(
+        f"concat_ws({sql_literal(sep)}, {empty_to_null_sql(a)}, {empty_to_null_sql(b)})"
+    )
+
+
+def commercialisation_dates_sql(x: str) -> tuple[str, str]:
+    m = f"regexp_extract_all({x}, {_DDMMYYYY}, 1)"
+    n = f"size({m})"
+
+    def one_date_with(word: str) -> str:
+        return f"{n} = 1 AND contains(lower({x}), '{word}')"
+
+    start = f"CASE WHEN {n} = 2 THEN {m}[0] WHEN {one_date_with('depuis le')} THEN {m}[0] END"
+    end = f"CASE WHEN {n} = 2 THEN {m}[1] WHEN {one_date_with('jusqu')} THEN {m}[0] END"
+    return start, end
+
+
+def strip_accents(x: str) -> Column:
     """Accent/script transliteration (reference A6,
     ``src/kafka_client/transformations.py:44-48``).
 
@@ -119,20 +191,16 @@ def strip_accents(col: Column | str) -> Column:
     would dominate; `translate`/`replace` stay inside whole-stage
     codegen.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    for src, dst in _MULTI:
-        c = F.replace(c, F.lit(src), F.lit(dst))
-    return F.translate(c, _ACCENT_SRC, _ACCENT_DST)
+    return F.expr(strip_accents_sql(_sql_arg(x)))
 
 
-def normalize_empty_to_null(col: Column | str) -> Column:
+def normalize_empty_to_null(x: str) -> Column:
     """Falsy string → NULL (reference semantics: missing/empty source
     values become None, not "" — ``transformations.py:56-58``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isNull() | (c == ""), F.lit(None)).otherwise(c)
+    return F.expr(empty_to_null_sql(_sql_arg(x)))
 
 
-def merge_columns(a: Column | str, b: Column | str, sep: str = "\n") -> Column:
+def merge_columns(a: str, b: str, sep: str = "\n") -> Column:
     """Null-aware two-column merge (reference A7,
     ``src/kafka_client/transformations.py:6-21``).
 
@@ -142,17 +210,10 @@ def merge_columns(a: Column | str, b: Column | str, sep: str = "\n") -> Column:
     `sep`. Empty strings are treated as NULL first, matching the
     reference's falsy checks.
     """
-    ca = normalize_empty_to_null(a)
-    cb = normalize_empty_to_null(b)
-    return F.when(ca.isNull() & cb.isNull(), F.lit(None)).otherwise(
-        F.concat_ws(sep, ca, cb)
-    )
+    return F.expr(merge_columns_sql(_sql_arg(a), _sql_arg(b), sep))
 
 
-_DDMMYYYY = r"(\d{2}/\d{2}/\d{4})"
-
-
-def split_commercialisation_dates(col: Column | str) -> tuple[Column, Column]:
+def split_commercialisation_dates(x: str) -> tuple[Column, Column]:
     """Regex date-range split (reference A8,
     ``src/kafka_client/transformations.py:24-41``).
 
@@ -161,22 +222,8 @@ def split_commercialisation_dates(col: Column | str) -> tuple[Column, Column]:
     "depuis le", end if it contains "jusqu"; anything else → (NULL,
     NULL). All JVM-side via regexp_extract_all + conditional chain.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    matches = F.regexp_extract_all(c, F.lit(_DDMMYYYY))
-    n = F.size(matches)
-    lower = F.lower(c)
-    one = n == 1
-    start = (
-        F.when(n == 2, matches[0])
-        .when(one & lower.contains("depuis le"), matches[0])
-        .otherwise(F.lit(None))
-    )
-    end = (
-        F.when(n == 2, matches[1])
-        .when(one & lower.contains("jusqu"), matches[0])
-        .otherwise(F.lit(None))
-    )
-    return start, end
+    start, end = commercialisation_dates_sql(_sql_arg(x))
+    return F.expr(start), F.expr(end)
 
 
 # Smart punctuation -> ASCII map (the corpus-cleaning companion to

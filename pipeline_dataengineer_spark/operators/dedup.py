@@ -13,15 +13,23 @@ array fns, explode + self-join on bucket) — no Python in the hot path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Largest signature table (Catalyst's sizeInBytes) for which
+# minhash_lsh_near_duplicates keeps the plain pairs-join verify shape.
+_SIG_PLAIN_JOIN_MAX_BYTES = 64 << 20
 # Largest cached pair table (Catalyst's sizeInBytes of the in-memory
 # relation) that minhash_lsh_near_duplicates broadcasts into both
 # verify legs.
 _PAIR_BROADCAST_MAX_BYTES = 100 << 20
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's sizeInBytes of ``df``'s optimized plan: file bytes
+    through Hadoop for a file scan, measured bytes for a materialized
+    cache. No job runs."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def dedup_exact(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
@@ -406,8 +414,9 @@ def minhash_lsh_near_duplicates(
         # 1. SMALL signature table (the sf0.1 case): the shipped
         #    `pairs ⋈ a ⋈ b` shape is already optimal — the planner
         #    broadcasts the sig legs, nothing corpus-sized shuffles.
-        #    Decided driver-side for free from the stage table's
-        #    on-disk bytes (no job).
+        #    Decided driver-side for free from Catalyst's sizeInBytes
+        #    of sig_df (no job): the stage table's file bytes on any
+        #    Hadoop filesystem, or the counted cache's measured bytes.
         # 2. BIG signature table, bounded pair set (the sf10 case —
         #    measured: the two corpus-sized array legs fell back to
         #    SMJ, ~2×16 GB of shuffled shingle arrays for a 9 MB
@@ -424,27 +433,13 @@ def minhash_lsh_near_duplicates(
         #    where a giant broadcast would OOM. The bound is on bytes,
         #    not rows: string ids make a pair many times wider than
         #    two bigints.
-        sig_bytes = None
-        if signature_stage_path is not None:
-            try:
-                sig_bytes = sum(
-                    os.path.getsize(os.path.join(dp, f))
-                    for dp, _, fns in os.walk(signature_stage_path)
-                    for f in fns
-                )
-            except OSError:
-                sig_bytes = None
-        if sig_bytes is not None and sig_bytes <= (64 << 20):
+        if _plan_bytes(sig_df) <= _SIG_PLAIN_JOIN_MAX_BYTES:
             verified = pairs.join(a, "id_a").join(b, "id_b")
         else:
             pairs = pairs.persist()
             to_unpersist.append(pairs)
             pairs.count()
-            # a materialized cache reports its measured bytes
-            pair_bytes = int(
-                pairs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            if pair_bytes <= _PAIR_BROADCAST_MAX_BYTES:
+            if _plan_bytes(pairs) <= _PAIR_BROADCAST_MAX_BYTES:
                 pa = a.join(F.broadcast(pairs), "id_a")
                 pb = b.join(F.broadcast(pairs), "id_b")
                 verified = pa.join(pb, ["id_a", "id_b"])

@@ -17,9 +17,11 @@ runners) gets the package root and ``_worker_site/`` on its path.
 ``_worker_site/sitecustomize.py`` moves Spark's bytecode-free
 ``pyspark.zip`` and py4j zip behind site-packages when the versions
 match, which halves each fresh process's start-up CPU. The
-``lookup_data_sources`` planner Spark starts for the session itself
-is launched without ``spark.executorEnv.*`` and still imports from
-the zip.
+``lookup_data_sources`` planner Spark starts once per JVM is launched
+without ``spark.executorEnv.*``: it takes its path from the JVM's own
+``PYTHONPATH``, so ``get_spark`` puts ``_worker_site/`` there for the
+``getOrCreate`` that launches the JVM and then restores the caller's
+environment.
 """
 
 from __future__ import annotations
@@ -117,7 +119,18 @@ def get_spark(
     )
     for k, v in extra_conf.items():
         builder = builder.config(k.replace("__", "."), v)
-    spark = builder.getOrCreate()
+    # The JVM copies this process's environment when getOrCreate
+    # launches it; the lookup_data_sources planner reads its path from
+    # there (see the module docstring).
+    caller_path = os.environ.get("PYTHONPATH")
+    os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (_WORKER_SITE, caller_path) if p)
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if caller_path is None:
+            os.environ.pop("PYTHONPATH", None)
+        else:
+            os.environ["PYTHONPATH"] = caller_path
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

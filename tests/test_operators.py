@@ -677,6 +677,9 @@ def test_minhash_pair_broadcast_gated_on_pair_table_bytes(spark, monkeypatch):
 
     numeric = list(range(24))
     strings = [f"{wide}{i:04d}" for i in numeric]
+    # a signature table this small takes the plain pairs-join shape;
+    # lower its bound to reach the two pair-table regimes
+    monkeypatch.setattr(dedup, "_SIG_PLAIN_JOIN_MAX_BYTES", -1)
     # 4 clusters of 6 identical docs: 60 pairs, cached in 960 bytes as
     # bigints and in about 6 KB as these strings
     monkeypatch.setattr(dedup, "_PAIR_BROADCAST_MAX_BYTES", 4096)
@@ -689,3 +692,45 @@ def test_minhash_pair_broadcast_gated_on_pair_table_bytes(spark, monkeypatch):
     assert b_bcast == 2
     assert by_str_shuffled == by_str_broadcast
     assert [(int(a[-4:]), int(b[-4:]), j) for a, b, j in by_str_broadcast] == by_int
+
+
+def test_minhash_small_cached_signatures_take_plain_join(spark, monkeypatch, tmp_path):
+    """With no stage path, a small signature table is sized from its
+    counted cache (Catalyst's sizeInBytes), so it takes the plain
+    pairs-join verify shape: the pair table is neither persisted nor
+    force-broadcast, and the answer equals the staged path's."""
+    from pyspark.sql import DataFrame
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog near the river bank",
+        "the quick brown fox jumps over the lazy dog near the river bend",
+        "completely unrelated text about database query optimization today",
+        "the quick brown fox jumps over the lazy dog near the river bank",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+    persisted = []
+    persist = DataFrame.persist
+
+    def recording_persist(self, *a, **kw):
+        persisted.append(self.columns)
+        return persist(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "persist", recording_persist)
+
+    def run(**kw):
+        out = minhash_lsh_near_duplicates(
+            docs, "doc_id", "text", num_hashes=64, bands=16, jaccard_threshold=0.5, **kw
+        )
+        broadcasts = out._jdf.queryExecution().analyzed().toString().count(
+            "strategy=broadcast"
+        )
+        got = sorted(tuple(r) for r in out.collect())
+        out.unpersist()
+        return broadcasts, got
+
+    cached_bcast, cached = run()
+    assert cached_bcast == 0
+    assert ["id_a", "id_b"] not in persisted
+    staged_bcast, staged = run(signature_stage_path=str(tmp_path / "sig"))
+    assert staged_bcast == 0
+    assert cached == staged == [(0, 1, 0.9), (0, 3, 1.0), (1, 3, 0.9)]

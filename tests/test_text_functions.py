@@ -14,8 +14,11 @@ from pipeline_dataengineer_spark.functions.text import (
     merge_columns,
     normalize_empty_to_null,
     split_commercialisation_dates,
+    sql_literal as lit,
     strip_accents,
 )
+
+NULL = "CAST(NULL AS STRING)"
 
 
 def _one(spark, expr):
@@ -24,31 +27,31 @@ def _one(spark, expr):
 
 def test_strip_accents_basic(spark):
     # transformations.py:44-48 (unidecode)
-    assert _one(spark, strip_accents(F.lit("Épicerie sucrée"))) == "Epicerie sucree"
+    assert _one(spark, strip_accents(lit("Épicerie sucrée"))) == "Epicerie sucree"
 
 
 def test_strip_accents_multichar(spark):
-    assert _one(spark, strip_accents(F.lit("œuf Æon straße"))) == "oeuf AEon strasse"
+    assert _one(spark, strip_accents(lit("œuf Æon straße"))) == "oeuf AEon strasse"
 
 
 def test_strip_accents_passthrough(spark):
-    assert _one(spark, strip_accents(F.lit("plain ASCII 123!"))) == "plain ASCII 123!"
+    assert _one(spark, strip_accents(lit("plain ASCII 123!"))) == "plain ASCII 123!"
 
 
 def test_strip_accents_greek(spark):
     # full-BMP NFD + Greek base-letter table (unidecode breadth)
-    assert _one(spark, strip_accents(F.lit("Ελληνικά κείμενα"))) == "Ellenika keimena"
-    assert _one(spark, strip_accents(F.lit("Θεσσαλονίκη"))) == "Thessalonike"
-    assert _one(spark, strip_accents(F.lit("φυσική ψυχή"))) == "phusike psukhe"
+    assert _one(spark, strip_accents(lit("Ελληνικά κείμενα"))) == "Ellenika keimena"
+    assert _one(spark, strip_accents(lit("Θεσσαλονίκη"))) == "Thessalonike"
+    assert _one(spark, strip_accents(lit("φυσική ψυχή"))) == "phusike psukhe"
 
 
 def test_strip_accents_cyrillic(spark):
     assert (
-        _one(spark, strip_accents(F.lit("Москва и Санкт-Петербург")))
+        _one(spark, strip_accents(lit("Москва и Санкт-Петербург")))
         == "Moskva i Sankt-Peterburg"
     )
     # documented divergences from unidecode: ё→e (NFD base), ъ dropped
-    assert _one(spark, strip_accents(F.lit("Хрущёв объявил"))) == "Khrushchev obiavil"
+    assert _one(spark, strip_accents(lit("Хрущёв объявил"))) == "Khrushchev obiavil"
 
 
 def test_strip_accents_decomposed_input(spark):
@@ -56,7 +59,7 @@ def test_strip_accents_decomposed_input(spark):
     # identically to the precomposed form: the combining block 0300-036F
     # is deleted by the translate map.
     decomposed = "étude"  # e + COMBINING ACUTE
-    assert _one(spark, strip_accents(F.lit(decomposed))) == "etude"
+    assert _one(spark, strip_accents(lit(decomposed))) == "etude"
 
 
 def test_strip_accents_matches_unidecode_when_available(spark):
@@ -85,31 +88,45 @@ def test_strip_accents_matches_unidecode_when_available(spark):
 
 def test_empty_to_null(spark):
     # transformations.py:56-58 — falsy → None, not ""
-    assert _one(spark, normalize_empty_to_null(F.lit(""))) is None
-    assert _one(spark, normalize_empty_to_null(F.lit("x"))) == "x"
-    assert _one(spark, normalize_empty_to_null(F.lit(None).cast("string"))) is None
+    assert _one(spark, normalize_empty_to_null(lit(""))) is None
+    assert _one(spark, normalize_empty_to_null(lit("x"))) == "x"
+    assert _one(spark, normalize_empty_to_null(NULL)) is None
 
 
 def test_merge_both_present(spark):
     # transformations.py:13-17 — joined with \n
-    got = _one(spark, merge_columns(F.lit("Listeria"), F.lit("voir fiche")))
+    got = _one(spark, merge_columns(lit("Listeria"), lit("voir fiche")))
     assert got == "Listeria\nvoir fiche"
 
 
 def test_merge_one_present(spark):
     # no leading/trailing separator
-    assert _one(spark, merge_columns(F.lit(None).cast("string"), F.lit("voir fiche"))) == "voir fiche"
-    assert _one(spark, merge_columns(F.lit("Listeria"), F.lit(None).cast("string"))) == "Listeria"
+    assert _one(spark, merge_columns(NULL, lit("voir fiche"))) == "voir fiche"
+    assert _one(spark, merge_columns(lit("Listeria"), NULL)) == "Listeria"
 
 
 def test_merge_both_absent_is_null(spark):
     # transformations.py:18 — the case concat_ws alone gets wrong ("")
-    assert _one(spark, merge_columns(F.lit(None).cast("string"), F.lit(None).cast("string"))) is None
-    assert _one(spark, merge_columns(F.lit(""), F.lit(""))) is None
+    assert _one(spark, merge_columns(NULL, NULL)) is None
+    assert _one(spark, merge_columns(lit(""), lit(""))) is None
+
+
+def test_merge_caller_separator_with_quote_and_backslash(spark):
+    # a caller's sep is rendered without escapes, so it survives either
+    # string-literal parser setting
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    try:
+        for escaped in ("false", "true"):
+            spark.conf.set(key, escaped)
+            got = _one(spark, merge_columns(lit("a"), lit("b"), sep=" \\' \\n"))
+            assert got == "a \\' \\nb"
+    finally:
+        spark.conf.set(key, before)
 
 
 def _split(spark, text):
-    s, e = split_commercialisation_dates(F.lit(text))
+    s, e = split_commercialisation_dates(NULL if text is None else lit(text))
     row = spark.range(1).select(s.alias("s"), e.alias("e")).collect()[0]
     return row["s"], row["e"]
 

@@ -177,3 +177,38 @@ def test_spark_python_processes_import_pyspark_from_site_packages(spark, tmp_pat
         query.stop()
     assert len(rows) == 1
     assert os.path.realpath(rows[0]["path"]).startswith(SITE_PACKAGES + os.sep)
+
+
+_JVM_PYTHONPATH = f"""
+import json, os, sys
+sys.path.insert(0, {REPO!r})
+from pipeline_dataengineer_spark.session import get_spark
+before = os.environ.get("PYTHONPATH")
+spark = get_spark("jvm-pythonpath", cpus=1)
+jvm = spark._jvm.System.getenv("PYTHONPATH")
+print(json.dumps([before, os.environ.get("PYTHONPATH"), jvm]))
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("caller_path", [None, "/nonexistent/caller-dir"])
+def test_jvm_pythonpath_carries_hook_and_caller_env_is_restored(caller_path):
+    """Spark's lookup_data_sources planner takes its path from the
+    JVM's own PYTHONPATH, not spark.executorEnv: get_spark launches the
+    JVM with _worker_site on it and leaves the caller's value as it
+    was, unset included."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    if caller_path is not None:
+        env["PYTHONPATH"] = caller_path
+    env["SPARK_GRAFT_DRIVER_MEM"] = "512m"
+    proc = subprocess.run(
+        [sys.executable, "-c", _JVM_PYTHONPATH], env=env, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    before, after, jvm = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert before == after == caller_path
+    jvm_dirs = jvm.split(os.pathsep)
+    assert HOOK in jvm_dirs
+    if caller_path is not None:
+        assert caller_path in jvm_dirs
