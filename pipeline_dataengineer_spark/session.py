@@ -14,9 +14,12 @@ Pandas-UDF slow path.
 Python processes: every Python process Spark launches (UDF daemon and
 workers, the per-query streaming source runner, data-source planner
 runners) gets the package root and ``_worker_site/`` on its path.
-``_worker_site/sitecustomize.py`` moves Spark's bytecode-free
-``pyspark.zip`` and py4j zip behind site-packages when the versions
-match, which halves each fresh process's start-up CPU. The
+``_worker_site/sitecustomize.py`` takes Spark's bytecode-free
+``pyspark.zip`` and py4j zip off the path when site-packages holds the
+same versions, which halves each fresh process's start-up CPU, and
+takes off Spark's core jar, which holds no Python. It also drops the
+finders ``site`` cached for them, so the ``importlib.invalidate_caches()``
+Spark runs on every task re-reads no archive directory. The
 ``lookup_data_sources`` planner Spark starts once per JVM is launched
 without ``spark.executorEnv.*``: it takes its path from the JVM's own
 ``PYTHONPATH``, so ``get_spark`` puts ``_worker_site/`` there for the
@@ -32,7 +35,7 @@ from pyspark.sql import SparkSession
 
 # the directory that holds pipeline_dataengineer_spark
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# the directory whose sitecustomize.py moves Spark's zips behind site-packages
+# the directory whose sitecustomize.py takes Spark's zips and core jar off the path
 _WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_site")
 
 

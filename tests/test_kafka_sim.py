@@ -7,7 +7,10 @@ the same code a real ``format("kafka")`` read would feed."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,6 +33,21 @@ def _produce_rows(spark, topic, rows):
     return produce(topic, kafka_json_payload(df, key_col="reference_fiche"))
 
 
+def _col(batches, name):
+    """One column of a reader's RecordBatches, as Python values."""
+    return [v for b in batches for v in b[name].to_pylist()]
+
+
+def _write_segment(log, first, lines_per_part):
+    """A segment as ``produce`` names it, one part file per list."""
+    rows = sum(len(lines) for lines in lines_per_part)
+    seg = log / f"seg-{first:020d}-{rows}"
+    seg.mkdir(parents=True)
+    for i, lines in enumerate(lines_per_part):
+        (seg / f"part-{i:05d}.json").write_text("".join(f"{ln}\n" for ln in lines))
+    return seg
+
+
 def test_batch_read_kafka_shape_and_offsets(spark, topic):
     _produce_rows(spark, topic, [("F-1", "a"), ("F-2", "b")])
     _produce_rows(spark, topic, [("F-3", "c")])
@@ -46,20 +64,28 @@ def test_batch_read_kafka_shape_and_offsets(spark, topic):
     assert got[0]["timestamp"] is not None
 
 
+def test_produce_names_segments_by_first_offset_and_rows(spark, topic):
+    assert _produce_rows(spark, topic, [("F-1", "a"), ("F-2", "b")]) == 0
+    assert _produce_rows(spark, topic, [("F-3", "c")]) == 2
+    empty = spark.createDataFrame([], "reference_fiche string, categorie_de_produit string")
+    assert produce(topic, kafka_json_payload(empty, key_col="reference_fiche")) == 3
+    assert sorted(os.listdir(topic)) == [f"seg-{0:020d}-2", f"seg-{2:020d}-1"]
+
+
 def test_stream_replays_committed_range_deterministically(spark, topic):
     from pipeline_dataengineer_spark.sources.kafka_sim import _LogStreamReader
 
     _produce_rows(spark, topic, [("F-1", "a"), ("F-2", "b"), ("F-3", "c")])
     r = _LogStreamReader({"path": topic})
     rows1, nxt = r.read({"offset": 0})
-    first = [t[4] for t in rows1]
+    first = _col(rows1, "offset")
     assert first == [0, 1, 2] and nxt == {"offset": 3}
     # replay the committed range: byte-identical records
     again = list(r.readBetweenOffsets({"offset": 0}, {"offset": 3}))
-    assert [t[4] for t in again] == first
-    assert [t[1] for t in again] == [t[1] for t in list(
-        r.readBetweenOffsets({"offset": 0}, {"offset": 3})
-    )]
+    assert _col(again, "offset") == first
+    assert _col(again, "value") == _col(
+        r.readBetweenOffsets({"offset": 0}, {"offset": 3}), "value"
+    )
     # nothing new -> empty read, offset unchanged
     rows2, nxt2 = r.read(nxt)
     assert list(rows2) == [] and nxt2 == nxt
@@ -74,29 +100,103 @@ def test_starting_offsets_latest_skips_history(spark, topic):
     assert start == {"offset": 1}
     _produce_rows(spark, topic, [("F-new", "y")])
     rows, _ = r.read(start)
-    assert [bytes(t[0]) for t in rows] == [b"F-new"]
+    assert _col(rows, "key") == [b"F-new"]
 
 
 def test_stream_batch_reads_each_segment_file_once(tmp_path, monkeypatch):
+    from pyarrow import json as pa_json
+
     from pipeline_dataengineer_spark.sources import kafka_sim
 
     log = tmp_path / "topic"
-    for seg, keys in enumerate((["F-1", "F-2"], ["F-3"])):
-        (log / f"seg-{seg:08d}").mkdir(parents=True)
-        (log / f"seg-{seg:08d}" / "part-00000.json").write_text(
-            "".join(f'{{"value":"v-{k}","key":"{k}"}}\n' for k in keys)
-        )
-    opened = []
+    for first, keys in ((0, ["F-1", "F-2"]), (2, ["F-3"])):
+        _write_segment(log, first, [[json.dumps({"value": f"v-{k}", "key": k}) for k in keys]])
+    read = []
+    real_read_json = pa_json.read_json
 
-    def counting_open(path, *args, **kwargs):
-        opened.append(os.path.basename(os.path.dirname(path)))
-        return open(path, *args, **kwargs)
+    def counting_read_json(path, *args, **kwargs):
+        read.append(os.path.basename(os.path.dirname(path)))
+        return real_read_json(path, *args, **kwargs)
 
-    monkeypatch.setattr(kafka_sim, "open", counting_open, raising=False)
+    monkeypatch.setattr(pa_json, "read_json", counting_read_json)
     r = kafka_sim._LogStreamReader({"path": str(log)})
     rows, nxt = r.read({"offset": 1})
-    assert [bytes(t[0]) for t in rows] == [b"F-2", b"F-3"] and nxt == {"offset": 3}
-    assert sorted(opened) == ["seg-00000000", "seg-00000001"]
+    assert _col(rows, "key") == [b"F-2", b"F-3"] and nxt == {"offset": 3}
+    assert sorted(read) == [f"seg-{0:020d}-2", f"seg-{2:020d}-1"]
+    # a batch past the first segment does not open it
+    read.clear()
+    rows, nxt = r.read({"offset": 2})
+    assert _col(rows, "key") == [b"F-3"] and nxt == {"offset": 3}
+    assert read == [f"seg-{2:020d}-1"]
+    # the high-water mark comes from the names alone
+    read.clear()
+    latest = kafka_sim._LogStreamReader({"path": str(log), "startingOffsets": "latest"})
+    assert latest.initialOffset() == {"offset": 3} and read == []
+
+
+def test_batches_carry_kafka_arrow_schema_and_exact_bytes(spark, tmp_path):
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pipeline_dataengineer_spark.sources.kafka_sim import KAFKA_SCAN_SCHEMA, _scan
+
+    records = [
+        {"value": "Épicerie fine — crème brûlée 日本", "key": "clé-1"},
+        {"value": 'a "quoted" word', "key": None},
+        {"value": "two\nlines", "key": "k\"3"},
+        {"value": "", "key": ""},
+        {"value": "no key field"},
+    ]
+    lines = [json.dumps(r, ensure_ascii=False) for r in records]
+    log = tmp_path / "topic"
+    seg = _write_segment(log, 0, [lines[:2], [], lines[2:]])
+    assert (seg / "part-00001.json").stat().st_size == 0
+    batches = list(_scan(str(log), "recalls", 0, None))
+    want = to_arrow_schema(spark.createDataFrame([], KAFKA_SCAN_SCHEMA).schema)
+    assert batches and all(b.schema == want for b in batches)
+    decoded = [json.loads(ln) for ln in lines]
+    assert _col(batches, "value") == [d["value"].encode() for d in decoded]
+    assert _col(batches, "key") == [
+        None if d.get("key") is None else d["key"].encode() for d in decoded
+    ]
+    assert _col(batches, "offset") == list(range(len(records)))
+    assert set(_col(batches, "topic")) == {"recalls"}
+    assert set(_col(batches, "partition")) == {0}
+    # a sub-range slices inside part files
+    assert _col(_scan(str(log), "recalls", 1, 3), "offset") == [1, 2]
+
+
+_NO_PANDAS = """
+import io, json, os, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
+                               StructField, StructType, TimestampType)
+from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
+from pipeline_dataengineer_spark.sources.kafka_sim import KafkaLogSource, _scan
+schema = StructType([
+    StructField("key", BinaryType()), StructField("value", BinaryType()),
+    StructField("topic", StringType()), StructField("partition", IntegerType()),
+    StructField("offset", LongType()), StructField("timestamp", TimestampType()),
+])
+batches = list(records_to_arrow_batches(
+    _scan({log!r}, "t", 0, None), 10000, schema, KafkaLogSource({{}})))
+ArrowStreamSerializer().dump_stream(batches, io.BytesIO())
+print(json.dumps([sum(b.num_rows for b in batches), "pandas" in sys.modules]))
+"""
+
+
+def test_scan_and_send_leave_pandas_unimported(tmp_path):
+    """The source runner's read path (``_scan``, Spark's batch check
+    and its Arrow stream writer) never imports pandas."""
+    log = tmp_path / "topic"
+    _write_segment(log, 0, [[json.dumps({"value": f"v{i}", "key": None}) for i in range(3)]])
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _NO_PANDAS.format(repo=repo, log=str(log))],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == [3, False]
 
 
 def test_full_round_trip_with_idempotent_sink(spark, topic, tmp_path):

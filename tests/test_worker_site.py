@@ -1,12 +1,14 @@
 """The start-up hook ``session.get_spark`` gives Spark's Python processes
 (``pipeline_dataengineer_spark/_worker_site/sitecustomize.py``): pyspark
 and py4j come from precompiled site-packages, not from Spark's
-bytecode-free zips, when the versions match."""
+bytecode-free zips, when the versions match, and the archives it takes
+off the path leave no finder behind."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import sysconfig
@@ -21,6 +23,12 @@ SITE_PACKAGES = os.path.realpath(sysconfig.get_paths()["purelib"])
 _PRINT_PATH = (
     "import json, sys; hook = sys.modules.get('sitecustomize'); "
     "print(json.dumps([sys.path, 'pyspark' in sys.modules, getattr(hook, '__file__', None)]))"
+)
+# every path a finder is cached for, after a task's invalidate_caches()
+_PRINT_FINDERS = (
+    "import importlib, json, sys, zipimport; importlib.invalidate_caches(); "
+    "print(json.dumps([sys.path, sorted(sys.path_importer_cache), "
+    "sorted(zipimport._zip_directory_cache)]))"
 )
 HOOK_FILE = os.path.join(HOOK, "sitecustomize.py")
 
@@ -48,7 +56,11 @@ def _sys_path(*pythonpath, code=_PRINT_PATH):
     return proc.stdout
 
 
-def test_equal_versions_move_zips_last(tmp_path):
+def _cached_under(keys, archive):
+    return [k for k in keys if k == archive or k.startswith(archive + os.sep)]
+
+
+def test_equal_versions_drop_zips_and_their_finders(tmp_path):
     site = tmp_path / "site"
     _installed(site, "pyspark", "9.9.9")
     _installed(site, "py4j", "0.1")
@@ -58,9 +70,37 @@ def test_equal_versions_move_zips_last(tmp_path):
         _sys_path(pyspark_zip, py4j_zip, HOOK, site)
     )
     assert hook == HOOK_FILE
-    assert path[-2:] == [pyspark_zip, py4j_zip]
-    assert path.index(str(site)) < path.index(pyspark_zip)
+    assert pyspark_zip not in path and py4j_zip not in path
+    assert str(site) in path
     assert not pyspark_imported
+    _, finders, zip_dirs = json.loads(
+        _sys_path(pyspark_zip, py4j_zip, HOOK, site, code=_PRINT_FINDERS)
+    )
+    for archive in (pyspark_zip, py4j_zip):
+        assert _cached_under(finders, archive) == []
+        assert _cached_under(zip_dirs, archive) == []
+
+
+def test_jar_leaves_path_and_importer_cache(tmp_path):
+    """Spark's core jar sits on every Python process's path and holds
+    no Python: the hook takes it off and forgets its zipimporters,
+    the ones ``site`` made for sub-paths included."""
+    jar = str(tmp_path / "spark-core_2.13-9.9.9.jar")
+    with zipfile.ZipFile(jar, "w") as zf:
+        zf.writestr("org/apache/spark/SparkContext.class", b"\xca\xfe")
+    later_jar = str(tmp_path / "later.jar")
+    shutil.copy(jar, later_jar)
+    path, finders, zip_dirs = json.loads(
+        _sys_path(jar, HOOK, later_jar, code=_PRINT_FINDERS)
+    )
+    assert HOOK in path
+    for archive in (jar, later_jar):
+        assert archive not in path
+        assert _cached_under(finders, archive) == []
+        assert _cached_under(zip_dirs, archive) == []
+    # without the hook the jar's finders stay cached
+    _, finders, zip_dirs = json.loads(_sys_path(jar, code=_PRINT_FINDERS))
+    assert jar in finders and jar in zip_dirs
 
 
 def test_different_version_keeps_zip_first(tmp_path):
@@ -73,7 +113,7 @@ def test_different_version_keeps_zip_first(tmp_path):
     assert hook == HOOK_FILE
     # each package is decided on its own: only py4j's versions match
     assert path.index(pyspark_zip) < path.index(HOOK) < path.index(str(site))
-    assert path[-1] == py4j_zip
+    assert py4j_zip not in path
 
 
 def test_no_zip_leaves_sys_path_unchanged(tmp_path):
@@ -94,14 +134,15 @@ def test_later_sitecustomize_still_runs(tmp_path):
     later = tmp_path / "later"
     later.mkdir()
     (later / "sitecustomize.py").write_text(
-        "import sys\nprint('later hook ran after the move:', sys.path[-1])\n"
+        "import sys\nprint('later hook ran, zip on the path:', "
+        f"{pyspark_zip!r} in sys.path)\n"
     )
     out = _sys_path(
         pyspark_zip, HOOK, later, site,
         code="import sitecustomize; print(sitecustomize.__file__)",
     )
     assert out.splitlines() == [
-        f"later hook ran after the move: {pyspark_zip}",
+        "later hook ran, zip on the path: False",
         str(later / "sitecustomize.py"),
     ]
 
@@ -132,8 +173,19 @@ def test_spark_python_processes_import_pyspark_from_site_packages(spark, tmp_pat
 
         return pyspark.__file__
 
+    @F.udf("array<string>")
+    def jar_finders(_):
+        import sys
+        import zipimport
+
+        cached = list(sys.path_importer_cache) + list(zipimport._zip_directory_cache)
+        return [k for k in cached if ".jar" in k]
+
     worker_file = spark.range(1).select(pyspark_file("id")).first()[0]
     assert os.path.realpath(worker_file).startswith(SITE_PACKAGES + os.sep)
+    # Spark's core jar is on every worker's PYTHONPATH; after a task's
+    # invalidate_caches() no finder for it is left to re-read it
+    assert spark.range(1).select(jar_finders("id")).first()[0] == []
 
     class _Reader(SimpleDataSourceStreamReader):
         def initialOffset(self):
