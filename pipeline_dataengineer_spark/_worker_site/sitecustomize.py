@@ -10,8 +10,9 @@ jar holds no Python at all.
 
 This hook takes off ``sys.path``:
 
-- every ``.jar`` entry (jars shipped with ``--py-files`` are added per task,
-  after start-up, and stay);
+- every ``.jar`` entry in the directory of Spark's core jar, Spark's own
+  jars. The test is on the path strings alone. A user jar elsewhere, one
+  that carries Python modules included, stays where it is;
 - for each of pyspark and py4j, its zip, when the zip's
   ``<package>/version.py`` is byte-identical to the one in the first
   directory on the path that holds the package (site-packages, whose
@@ -74,8 +75,17 @@ def _chain() -> None:
         spec.loader.exec_module(module)
 
 
+def _spark_jars() -> list:
+    spark_dirs = {
+        os.path.dirname(p)
+        for p in sys.path
+        if os.path.basename(p).startswith("spark-core_") and p.endswith(".jar")
+    }
+    return [p for p in sys.path if p.endswith(".jar") and os.path.dirname(p) in spark_dirs]
+
+
 _drop(
-    [p for p in sys.path if p.endswith(".jar")]
+    _spark_jars()
     + _redundant_zips("pyspark")
     + _redundant_zips("py4j")
 )

@@ -17,7 +17,8 @@ runners) gets the package root and ``_worker_site/`` on its path.
 ``_worker_site/sitecustomize.py`` takes Spark's bytecode-free
 ``pyspark.zip`` and py4j zip off the path when site-packages holds the
 same versions, which halves each fresh process's start-up CPU, and
-takes off Spark's core jar, which holds no Python. It also drops the
+takes off Spark's core jar, which holds no Python, with the other jars
+of its directory. It also drops the
 finders ``site`` cached for them, so the ``importlib.invalidate_caches()``
 Spark runs on every task re-reads no archive directory. The
 ``lookup_data_sources`` planner Spark starts once per JVM is launched

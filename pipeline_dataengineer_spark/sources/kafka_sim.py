@@ -32,13 +32,15 @@ count: ``seg-<first>-<rows>``. ``produce`` counts the newlines of the
 part files it staged (Spark writes one JSON record per line and
 escapes newlines inside strings), so the topic's high-water mark,
 ``startingOffsets=latest`` and the offset range of every segment come
-from a directory listing, with no file read.
+from a directory listing, with no file read. A listing whose segments
+overlap or leave a gap (two producers raced on the topic) raises.
 
 What a micro-batch reads: only the segments that overlap its offset
 range ``[start, end)``; older ones are skipped without being opened,
 so a round that drains one new segment reads one segment whatever the
 topic's length. Each part file is parsed by ``pyarrow.json.read_json``
-with an explicit ``value``/``key`` string schema, sliced to the range
+as one block (so no record is too long to parse) with an explicit
+``value``/``key`` string schema, sliced to the range
 and handed to Spark as ``pyarrow.RecordBatch``es carrying exactly the
 Arrow form of ``KAFKA_SCAN_SCHEMA``: ``key``/``value`` are the parsed
 strings viewed as binary (zero-copy), and ``topic``, ``partition``,
@@ -55,6 +57,7 @@ from __future__ import annotations
 
 import array
 import os
+import re
 import shutil
 import uuid
 
@@ -94,7 +97,7 @@ _PAYLOAD_SCHEMA = pa.schema([("value", pa.string()), ("key", pa.string())])
 _PARSE = pa_json.ParseOptions(
     explicit_schema=_PAYLOAD_SCHEMA, unexpected_field_behavior="ignore"
 )
-_READ = pa_json.ReadOptions(use_threads=False)
+_SEGMENT = re.compile(r"seg-(\d{20})-(\d+)")
 
 
 def produce(log_dir: str, payload_df: DataFrame) -> int:
@@ -121,15 +124,29 @@ def produce(log_dir: str, payload_df: DataFrame) -> int:
 
 def _segments(log_dir: str) -> list[tuple[int, int, str]]:
     """``(first offset, record count, directory)`` of every segment,
-    in offset order, from the directory names alone."""
+    in offset order, from the directory names alone. Raises when the
+    segments' offset ranges do not follow one another (two producers
+    raced on the topic) or a name is not ``seg-<first>-<rows>``."""
     if not os.path.isdir(log_dir):
         return []
     segs = []
     for name in os.listdir(log_dir):
         if name.startswith("seg-"):
-            _, first, rows = name.split("-")
-            segs.append((int(first), int(rows), os.path.join(log_dir, name)))
-    return sorted(segs)
+            m = _SEGMENT.fullmatch(name)
+            if m is None:
+                raise ValueError(
+                    f"{os.path.join(log_dir, name)}: not a seg-<first offset, 20 digits>-<rows> "
+                    "segment; topics written in the older seg-<index> layout must be produced again"
+                )
+            segs.append((int(m[1]), int(m[2]), os.path.join(log_dir, name)))
+    segs.sort()
+    for (first, rows, seg_dir), (nxt, _, nxt_dir) in zip(segs, segs[1:]):
+        if nxt != first + rows:
+            raise ValueError(
+                f"{nxt_dir} starts at offset {nxt}, but {seg_dir} ends at {first + rows}: "
+                "the topic's segments overlap or leave a gap (one producer per topic)"
+            )
+    return segs
 
 
 def _high_water_mark(log_dir: str) -> int:
@@ -192,7 +209,12 @@ def _scan(log_dir: str, topic: str, start: int, end: int | None):
             st = os.stat(path)
             if st.st_size == 0:
                 continue
-            table = pa_json.read_json(path, read_options=_READ, parse_options=_PARSE)
+            # one block for the whole file: a record longer than a block
+            # cannot be parsed, and the file becomes one table anyway
+            read = pa_json.ReadOptions(
+                use_threads=False, block_size=min(max(st.st_size, 1 << 20), (1 << 31) - 1)
+            )
+            table = pa_json.read_json(path, read_options=read, parse_options=_PARSE)
             lo = max(start - offset, 0)
             hi = table.num_rows if end is None else min(table.num_rows, end - offset)
             for payload in table.slice(lo, max(hi - lo, 0)).to_batches():

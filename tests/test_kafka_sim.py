@@ -165,6 +165,39 @@ def test_batches_carry_kafka_arrow_schema_and_exact_bytes(spark, tmp_path):
     assert _col(_scan(str(log), "recalls", 1, 3), "offset") == [1, 2]
 
 
+def test_record_longer_than_a_json_block_reads_back_exactly(tmp_path):
+    """pyarrow's JSON reader cannot parse a record longer than its block
+    (1 MiB by default); a part file is read as one block, so a 2 MiB
+    record reads back byte-exact."""
+    from pipeline_dataengineer_spark.sources.kafka_sim import _scan
+
+    big = "é\"x\n" * (1 << 19) + "end"
+    values = ["before", big, "after"]
+    log = tmp_path / "topic"
+    _write_segment(log, 0, [[json.dumps({"value": v, "key": None}) for v in values]])
+    batches = list(_scan(str(log), "t", 0, None))
+    assert _col(batches, "value") == [v.encode() for v in values]
+    assert len(big.encode()) > 2 << 20
+    assert _col(_scan(str(log), "t", 1, 2), "value") == [big.encode()]
+
+
+def test_overlapping_or_old_format_segments_raise(tmp_path):
+    from pipeline_dataengineer_spark.sources.kafka_sim import _LogStreamReader, _scan
+
+    line = json.dumps({"value": "v", "key": None})
+    log = tmp_path / "topic"
+    _write_segment(log, 0, [[line, line]])
+    _write_segment(log, 1, [[line]])  # a racing producer's overlapping segment
+    with pytest.raises(ValueError, match="overlap or leave a gap"):
+        list(_scan(str(log), "t", 0, None))
+    with pytest.raises(ValueError, match="overlap or leave a gap"):
+        _LogStreamReader({"path": str(log), "startingOffsets": "latest"}).initialOffset()
+    old = tmp_path / "old-topic"
+    (old / "seg-00000000").mkdir(parents=True)
+    with pytest.raises(ValueError, match="older seg-<index> layout"):
+        list(_scan(str(old), "t", 0, None))
+
+
 _NO_PANDAS = """
 import io, json, os, sys
 sys.path.insert(0, {repo!r})

@@ -83,21 +83,32 @@ def test_equal_versions_drop_zips_and_their_finders(tmp_path):
 
 def test_jar_leaves_path_and_importer_cache(tmp_path):
     """Spark's core jar sits on every Python process's path and holds
-    no Python: the hook takes it off and forgets its zipimporters,
-    the ones ``site`` made for sub-paths included."""
-    jar = str(tmp_path / "spark-core_2.13-9.9.9.jar")
+    no Python: the hook takes it and the other jars of its directory
+    off and forgets their zipimporters, the ones ``site`` made for
+    sub-paths included. A user jar elsewhere stays and imports."""
+    jars = tmp_path / "jars"
+    jars.mkdir()
+    jar = str(jars / "spark-core_2.13-9.9.9.jar")
     with zipfile.ZipFile(jar, "w") as zf:
         zf.writestr("org/apache/spark/SparkContext.class", b"\xca\xfe")
-    later_jar = str(tmp_path / "later.jar")
+    later_jar = str(jars / "spark-sql_2.13-9.9.9.jar")
     shutil.copy(jar, later_jar)
+    user_jar = str(tmp_path / "user.jar")
+    with zipfile.ZipFile(user_jar, "w") as zf:
+        zf.writestr("user_pkg/__init__.py", "WHERE = 'user jar'\n")
     path, finders, zip_dirs = json.loads(
-        _sys_path(jar, HOOK, later_jar, code=_PRINT_FINDERS)
+        _sys_path(jar, HOOK, later_jar, user_jar, code=_PRINT_FINDERS)
     )
     assert HOOK in path
     for archive in (jar, later_jar):
         assert archive not in path
         assert _cached_under(finders, archive) == []
         assert _cached_under(zip_dirs, archive) == []
+    assert user_jar in path
+    out = _sys_path(
+        jar, HOOK, user_jar, code="import user_pkg; print(user_pkg.WHERE)"
+    )
+    assert out.strip() == "user jar"
     # without the hook the jar's finders stay cached
     _, finders, zip_dirs = json.loads(_sys_path(jar, code=_PRINT_FINDERS))
     assert jar in finders and jar in zip_dirs
