@@ -6615,10 +6615,9 @@ JOIN kd ON l.ida = kd.ida
 JOIN mb ON mb.ida = l.ida
 """
 
-# The *_dist twins run the distributed (no-unkeyed-window) engine
-# paths; the VALUES are identical by construction, so each shares
-# its sibling's oracle verbatim — the check is that a scale-safe
-# plan computes the same answer.
+# Each *_dist twin is its sibling's query under a second name (the
+# plan audit pins its scale-regime plan), so it shares the sibling's
+# oracle verbatim.
 ORACLES["q_roc_auc_dist"] = ORACLES["q_roc_auc"]
 ORACLES["q_avg_precision_dist"] = ORACLES["q_avg_precision"]
 ORACLES["q_propensity_att_dist"] = ORACLES["q_propensity_att"]
@@ -7054,7 +7053,7 @@ FROM m
 # q_kendall_cont: the oracle is the O(n²) TEXTBOOK pair definition
 # (affordable on the bounded 2000-row fixture: 4M pair evaluations),
 # NOT a replay of the engine's decomposition — an independent check
-# of the distributed inversion-counting path.
+# of the inversion-counting path.
 ORACLES["q_kendall_cont"] = """
 WITH base AS (
   SELECT c_acctbal + c_custkey / 1000.0 AS x,
@@ -8665,8 +8664,6 @@ SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
 FROM c
 """
 
-# distributed=True computes identical exact-dyadic sums from
-# tie-class counts — bit-identical statistics, same oracle.
 ORACLES["q_brunner_munzel_dist"] = ORACLES["q_brunner_munzel"]
 
 # q_simhash is a PROPERTY differential (round 8): the engine computes

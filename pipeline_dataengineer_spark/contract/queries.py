@@ -4539,9 +4539,9 @@ def q_mann_whitney(spark, sf_dir):
 def q_sorted_neighborhood(spark, sf_dir):
     """Sorted-neighborhood ER blocking (operators/order.py): customer
     pairs within 3 positions of the account-balance total order. The
-    global index is the two-phase distributed sort (range partition +
-    per-partition offsets) — NEVER row_number over an unpartitioned
-    window — and pair generation is an equi-join on index blocks.
+    global index is order.global_row_index (one task when small,
+    range partition + per-partition offsets otherwise), and pair
+    generation is an equi-join on index blocks.
     Oracle uses the single-node row_number formulation."""
     from pipeline_dataengineer_spark.operators.order import (
         sorted_neighborhood_pairs,
@@ -4982,9 +4982,10 @@ def q_mutual_info(spark, sf_dir):
 @query("q_ks_test")
 def q_ks_test(spark, sf_dir):
     """Two-sample KS statistic (operators/stats_tests.py:ks_test)
-    between URGENT and LOW order totalprice distributions — pooled
-    single window with a RANGE (tie-absorbing) cumulative frame.
-    Oracle = same ECDF construction in DuckDB SQL, round(6)."""
+    between URGENT and LOW order totalprice distributions — per-side
+    running counts over the distinct values (the tie-absorbed ECDF).
+    Oracle = the ECDF built with a RANGE window frame in DuckDB SQL,
+    round(6)."""
     from pipeline_dataengineer_spark.operators.stats_tests import ks_test
 
     o = table(spark, sf_dir, "orders")
@@ -5656,10 +5657,10 @@ def q_rrf_fusion(spark, sf_dir):
 def q_shuffle_index(spark, sf_dir):
     """Deterministic corpus shuffle (operators/order.py:
     deterministic_shuffle): every doc's position in the Lehmer-hash
-    permutation, computed by the two-phase distributed global index —
-    no single-task ORDER BY window. Hash-checking (doc_id, pos) pairs
-    verifies the whole distributed total-order machinery against a
-    plain row_number replay."""
+    permutation, computed by order.global_row_index. Hash-checking
+    (doc_id, pos) pairs verifies the total-order machinery against a
+    plain row_number replay; the plan audit pins the two-phase plan
+    under the scale regime."""
     from pipeline_dataengineer_spark.operators.order import deterministic_shuffle
 
     d = table(spark, sf_dir, "documents").select("doc_id")
@@ -5945,8 +5946,8 @@ def q_inner_repetition(spark, sf_dir):
 @query("q_global_quantiles")
 def q_global_quantiles(spark, sf_dir):
     """Exact table-wide discrete quantiles without a single-task sort
-    (operators/robust.py:global_exact_quantiles — two-phase
-    distributed total order, rank positions plucked). Values are
+    of a large table (operators/robust.py:global_exact_quantiles —
+    global total order, rank positions plucked). Values are
     observed elements, so equality is exact, no rounding."""
     from pipeline_dataengineer_spark.operators.robust import (
         global_exact_quantiles,
@@ -8808,8 +8809,8 @@ def q_rowgroup_stats(spark, sf_dir):
 def q_benjamini_hochberg(spark, sf_dir):
     """Benjamini-Hochberg FDR adjustment (operators/stats_tests.py:
     benjamini_hochberg) over a deterministic per-order pseudo
-    p-value table — ascending rank + descending running-min, pure
-    window algebra, oracle-replayed bit-for-bit."""
+    p-value table — ascending rank + descending running-min,
+    oracle-replayed bit-for-bit."""
     from pipeline_dataengineer_spark.operators.sampling import (
         portable_bucket,
     )
@@ -8833,8 +8834,8 @@ def q_benjamini_hochberg(spark, sf_dir):
 def q_propensity_att(spark, sf_dir):
     """Propensity-matched ATT (operators/causal.py:
     propensity_match_att): nearest-control-by-score matching with
-    replacement as TWO cumulative windows over one global score sort
-    — no join, no per-row search. Scores are an injective Lehmer
+    replacement as TWO ordered forward-fills over one score sort —
+    no join, no per-row search. Scores are an injective Lehmer
     scramble (distinct, so tie-free and engine-deterministic);
     caliper drops distant pairs. Oracle replays both windows."""
     from pipeline_dataengineer_spark.operators.causal import (
@@ -9009,72 +9010,23 @@ def q_lof(spark, sf_dir):
 
 @query("q_roc_auc_dist")
 def q_roc_auc_dist(spark, sf_dir):
-    """roc_auc(distributed=True): the SAME exact tie-corrected AUC as
-    q_roc_auc but with no unkeyed window anywhere — distinct-score
-    hash agg + two-phase global cumsum (operators/order.py:
-    global_cumsum). Shares q_roc_auc's oracle verbatim: the whole
-    point is value identity under a scale-safe plan."""
-    from pipeline_dataengineer_spark.operators.calibration import roc_auc
-    from pipeline_dataengineer_spark.operators.sampling import (
-        portable_bucket,
-    )
-
-    c = table(spark, sf_dir, "customer").select(
-        (portable_bucket(F.col("c_custkey"), 100) / 100.0).alias("score"),
-        (
-            portable_bucket(F.col("c_custkey") + 7, 100)
-            < portable_bucket(F.col("c_custkey"), 100) + 15
-        )
-        .cast("int")
-        .alias("label"),
-    )
-    return roc_auc(c, "score", "label", distributed=True)
+    """q_roc_auc's query under a second name with q_roc_auc's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_roc_auc(spark, sf_dir)
 
 
 @query("q_avg_precision_dist")
 def q_avg_precision_dist(spark, sf_dir):
-    """average_precision(distributed=True): same AP as
-    q_avg_precision via global_cumsum's two-phase row index + running
-    label sum — no unkeyed window. Shares q_avg_precision's oracle
-    verbatim."""
-    from pipeline_dataengineer_spark.operators.calibration import (
-        average_precision,
-    )
-    from pipeline_dataengineer_spark.operators.sampling import (
-        portable_bucket,
-    )
-
-    c = table(spark, sf_dir, "customer").select(
-        (portable_bucket(F.col("c_custkey"), 100) / 100.0).alias("score"),
-        (
-            portable_bucket(F.col("c_custkey") + 7, 100)
-            < portable_bucket(F.col("c_custkey"), 100) + 15
-        )
-        .cast("int")
-        .alias("label"),
-    )
-    return average_precision(c, "score", "label", distributed=True)
+    """q_avg_precision's query under a second name with q_avg_precision's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_avg_precision(spark, sf_dir)
 
 
 @query("q_propensity_att_dist")
 def q_propensity_att_dist(spark, sf_dir):
-    """propensity_match_att(distributed=True): same matches as
-    q_propensity_att via distinct-control-score hash agg + two
-    two-phase ordered forward-fills (operators/order.py:
-    global_running_last) — no unkeyed window. Shares
-    q_propensity_att's oracle verbatim."""
-    from pipeline_dataengineer_spark.operators.causal import (
-        propensity_match_att,
-    )
-
-    c = table(spark, sf_dir, "customer").select(
-        ((F.col("c_custkey") * 48271 % 99991) / 99991.0).alias("score"),
-        ((F.col("c_custkey") * 16807 % 10) < 3).cast("int").alias("tr"),
-        F.round("c_acctbal", 2).alias("y"),
-    )
-    return propensity_match_att(
-        c, "tr", "y", "score", caliper=0.05, distributed=True
-    )
+    """q_propensity_att's query under a second name with q_propensity_att's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_propensity_att(spark, sf_dir)
 
 
 @query("q_spearman")
@@ -9096,27 +9048,18 @@ def q_spearman(spark, sf_dir):
 
 @query("q_spearman_dist")
 def q_spearman_dist(spark, sf_dir):
-    """spearman_rho(distributed=True): identical rho via the
-    two-phase global cumsum over distinct values — no unkeyed window.
-    Shares q_spearman's oracle verbatim."""
-    from pipeline_dataengineer_spark.operators.stats_tests import (
-        spearman_rho,
-    )
-
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_quantity", "l_extendedprice"
-    )
-    return spearman_rho(
-        li, "l_quantity", "l_extendedprice", distributed=True
-    )
+    """q_spearman's query under a second name with q_spearman's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_spearman(spark, sf_dir)
 
 
 @query("q_kendall")
 def q_kendall(spark, sf_dir):
     """Kendall τ-b (operators/stats_tests.py:kendall_tau_b) between
-    two bucketed ordinal features of orders — the distinct-CELL
-    dominance reduction (cost quadratic in cells, linear in rows).
-    Oracle replays cells + dominance self-join + tie terms."""
+    two bucketed ordinal features of orders — exact concordant and
+    discordant counts by inversion counting over the (x, y) sort.
+    Oracle replays distinct cells + a dominance self-join + tie
+    terms, an independent formulation."""
     from pipeline_dataengineer_spark.operators.stats_tests import (
         kendall_tau_b,
     )
@@ -9132,23 +9075,9 @@ def q_kendall(spark, sf_dir):
 
 @query("q_kendall_dist")
 def q_kendall_dist(spark, sf_dir):
-    """kendall_tau_b(distributed=True): exact τ-b via per-partition
-    vectorized inversion counting + distinct-y cross-partition
-    cumulative dominance — no distinct-cell cap, no quadratic join
-    (the continuous-domain scale path, round 7). Shares q_kendall's
-    oracle verbatim; the result row is driver-assembled from exact
-    long counts, so the plan tail is a literal scan."""
-    from pipeline_dataengineer_spark.operators.stats_tests import (
-        kendall_tau_b,
-    )
-
-    o = table(spark, sf_dir, "orders").select(
-        (F.col("o_orderkey") % 7).cast("double").alias("xa"),
-        (F.floor(F.col("o_totalprice") / 50000)).cast("double").alias(
-            "xb"
-        ),
-    )
-    return kendall_tau_b(o, "xa", "xb", distributed=True)
+    """q_kendall's query under a second name with q_kendall's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_kendall(spark, sf_dir)
 
 
 @query("q_fim_transform")
@@ -9372,8 +9301,8 @@ def q_grouped_spearman(spark, sf_dir):
     """Per-segment Spearman ρ (operators/stats_tests.py:
     grouped_spearman): rank correlation of account balance vs a
     derived ordinal per market segment — keyed windows over per-group
-    distinct-value tables, scale-safe with no distributed switch
-    (the grouped_roc_auc shape). Oracle replays fractional ranks via
+    distinct-value tables, scale-safe at any group count (the
+    grouped_roc_auc shape). Oracle replays fractional ranks via
     rank() + (ties-1)/2 and the Pearson-on-ranks moments."""
     from pipeline_dataengineer_spark.operators.stats_tests import (
         grouped_spearman,
@@ -9393,10 +9322,10 @@ def q_grouped_spearman(spark, sf_dir):
 
 @query("q_kendall_cont")
 def q_kendall_cont(spark, sf_dir):
-    """kendall_tau_b(distributed=True) on a CONTINUOUS fixture —
-    ~all-distinct (x, y) over 2000 customers, the exact case the
-    default path's cell cap forbids. Spark runs the O(n log n)
-    inversion decomposition; the oracle can afford the O(n²)
+    """kendall_tau_b on a CONTINUOUS fixture — ~all-distinct (x, y)
+    over 2000 customers, where a cell-level dominance join would be
+    quadratic in the rows. Spark runs the O(n log n) inversion
+    decomposition; the oracle can afford the O(n²)
     definition directly (4M pair evaluations on the bounded fixture),
     so this differential checks the scale path against the textbook
     pair count, not a replay of our own algebra."""
@@ -9413,7 +9342,7 @@ def q_kendall_cont(spark, sf_dir):
             + (F.col("c_custkey") * 2654435761 % 1000) / 10.0
         ).alias("y"),
     )
-    return kendall_tau_b(c, "x", "y", distributed=True)
+    return kendall_tau_b(c, "x", "y")
 
 
 @query("q_gini")
@@ -9441,8 +9370,8 @@ def q_gini(spark, sf_dir):
 @query("q_gini_global")
 def q_gini_global(spark, sf_dir):
     """Ungrouped Gini over order totals — the global rank comes from
-    the two-phase distributed cumsum, never an unkeyed window (plan
-    audited). Oracle replays the same formula with a window."""
+    order.global_cumsum (its scale-regime plan audited). Oracle
+    replays the same formula with a window."""
     from pipeline_dataengineer_spark.operators.inequality import (
         gini_coefficient,
     )
@@ -9455,8 +9384,7 @@ def q_gini_global(spark, sf_dir):
 @query("q_lorenz")
 def q_lorenz(spark, sf_dir):
     """Lorenz curve (operators/inequality.py:lorenz_curve) of order
-    totals at deciles — prefix value shares off the distributed
-    cumsum. Oracle replays via a window over the sorted values."""
+    totals at deciles — prefix value shares off order.global_cumsum. Oracle replays via a window over the sorted values."""
     from pipeline_dataengineer_spark.operators.inequality import (
         lorenz_curve,
     )
@@ -9555,39 +9483,16 @@ def q_pca_project(spark, sf_dir):
 
 @query("q_mann_whitney_dist")
 def q_mann_whitney_dist(spark, sf_dir):
-    """mann_whitney_u(distributed=True): identical U/z via the
-    distinct-value hash agg + two-phase cumsum — no unkeyed window.
-    Shares q_mann_whitney's oracle verbatim."""
-    from pipeline_dataengineer_spark.operators.stats_tests import (
-        mann_whitney_u,
-    )
-
-    ev = table(spark, sf_dir, "events")
-    return mann_whitney_u(
-        ev, "event_type", "value", "click", "view", distributed=True
-    )
+    """q_mann_whitney's query under a second name with q_mann_whitney's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_mann_whitney(spark, sf_dir)
 
 
 @query("q_ks_test_dist")
 def q_ks_test_dist(spark, sf_dir):
-    """ks_test(distributed=True): identical KS statistic via the
-    distinct-value inclusive cumsum (== the range frame's
-    tie-absorbed ECDF) — no unkeyed window. Shares q_ks_test's
-    oracle verbatim."""
-    from pipeline_dataengineer_spark.operators.stats_tests import ks_test
-
-    o = table(spark, sf_dir, "orders")
-    out = ks_test(
-        o,
-        "o_orderpriority",
-        "o_totalprice",
-        "1-URGENT",
-        "5-LOW",
-        distributed=True,
-    )
-    return out.select(
-        F.round("ks_stat", 6).alias("ks_stat"), "n_a", "n_b"
-    )
+    """q_ks_test's query under a second name with q_ks_test's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_ks_test(spark, sf_dir)
 
 
 @query("q_preference_pairs")
@@ -9723,28 +9628,9 @@ def q_krippendorff(spark, sf_dir):
 
 @query("q_benjamini_hochberg_dist")
 def q_benjamini_hochberg_dist(spark, sf_dir):
-    """benjamini_hochberg(distributed=True): identical q-values via
-    the two-phase global row index + global running-min — no unkeyed
-    window. Shares q_benjamini_hochberg's oracle verbatim."""
-    from pipeline_dataengineer_spark.operators.sampling import (
-        portable_bucket,
-    )
-    from pipeline_dataengineer_spark.operators.stats_tests import (
-        benjamini_hochberg,
-    )
-
-    h = (
-        table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 1000)
-        .select(
-            F.col("o_orderkey").alias("hyp_id"),
-            (portable_bucket(F.col("o_orderkey"), 100000) / 100000.0)
-            .alias("p"),
-        )
-    )
-    return benjamini_hochberg(
-        h, "hyp_id", "p", alpha=0.05, distributed=True
-    )
+    """q_benjamini_hochberg's query under a second name with q_benjamini_hochberg's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_benjamini_hochberg(spark, sf_dir)
 
 
 @query("q_confusion_matrix")
@@ -9881,7 +9767,7 @@ def q_wasserstein(spark, sf_dir):
 def q_grouped_auc(spark, sf_dir):
     """Per-segment ROC-AUC (operators/calibration.py:
     grouped_roc_auc): the q_roc_auc scorer sliced by market segment —
-    keyed rank windows, scale-safe without a distributed switch.
+    keyed rank windows, scale-safe at any group count.
     Oracle replays the per-group rank-sum identity."""
     from pipeline_dataengineer_spark.operators.calibration import (
         grouped_roc_auc,
@@ -9964,22 +9850,9 @@ def q_cliffs_delta(spark, sf_dir):
 
 @query("q_cliffs_delta_dist")
 def q_cliffs_delta_dist(spark, sf_dir):
-    """cliffs_delta(distributed=True): identical dominance counts via
-    the two-phase exclusive global_cumsum over the distinct-value
-    table — no unkeyed window (the continuous-domain scale path;
-    round-6 VERDICT item 2). Shares q_cliffs_delta's oracle
-    verbatim."""
-    from pipeline_dataengineer_spark.operators.stats_tests import (
-        cliffs_delta,
-    )
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderpriority", F.round("o_totalprice", 0).alias("tp")
-    )
-    return cliffs_delta(
-        o, "o_orderpriority", "tp", "1-URGENT", "5-LOW",
-        distributed=True,
-    )
+    """q_cliffs_delta's query under a second name with q_cliffs_delta's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_cliffs_delta(spark, sf_dir)
 
 
 @query("q_vocab_overlap")
@@ -10156,18 +10029,9 @@ def q_holm(spark, sf_dir):
 
 @query("q_holm_dist")
 def q_holm_dist(spark, sf_dir):
-    """holm_bonferroni(distributed=True): identical adjusted p via
-    the two-phase global row index + running max derived from
-    global_cummin (max(x) = -cummin(-x)) — no unkeyed window; shares
-    q_holm's oracle verbatim."""
-    from pipeline_dataengineer_spark.operators.stats_tests import (
-        holm_bonferroni,
-    )
-
-    return holm_bonferroni(
-        _holm_hypotheses(spark, sf_dir), "hyp_id", "p", alpha=0.05,
-        distributed=True,
-    )
+    """q_holm's query under a second name with q_holm's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_holm(spark, sf_dir)
 
 
 @query("q_pruned_read")
@@ -10326,8 +10190,8 @@ def q_aipw_ate(spark, sf_dir):
 def q_qte(spark, sf_dir):
     """Quantile treatment effects (operators/causal.py:
     quantile_treatment_effects) on the q_aipw_ate fixture: exact
-    per-arm discrete quantiles (two-phase distributed sort, no
-    single-task ORDER BY) differenced at 0.25/0.5/0.75. Oracle =
+    per-arm discrete quantiles (order.global_row_index's sized sort)
+    differenced at 0.25/0.5/0.75. Oracle =
     quantile_disc per arm."""
     from pipeline_dataengineer_spark.operators.causal import (
         quantile_treatment_effects,
@@ -10398,27 +10262,9 @@ def q_brunner_munzel(spark, sf_dir):
 
 @query("q_brunner_munzel_dist")
 def q_brunner_munzel_dist(spark, sf_dir):
-    """brunner_munzel(distributed=True): identical midrank/placement
-    sums via distinct-value hash agg + ONE two-phase exclusive
-    global_cumsum — no unkeyed WindowExec anywhere in the plan (the
-    round-7 VERDICT item 2 scale path; mirrors q_cliffs_delta_dist).
-    Shares q_brunner_munzel's oracle verbatim: both paths sum exact
-    dyadic terms, so the rounded statistics are bit-identical."""
-    from pipeline_dataengineer_spark.operators.stats_tests import (
-        brunner_munzel,
-    )
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderpriority", "o_totalprice"
-    )
-    return brunner_munzel(
-        o,
-        "o_orderpriority",
-        "o_totalprice",
-        "1-URGENT",
-        "5-LOW",
-        distributed=True,
-    )
+    """q_brunner_munzel's query under a second name with q_brunner_munzel's oracle. The
+    plan audit (tools/explain_audit.py) pins its scale-regime plan."""
+    return q_brunner_munzel(spark, sf_dir)
 
 
 @query("q_encoding_repair")

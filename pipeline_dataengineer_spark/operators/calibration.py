@@ -25,6 +25,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from pipeline_dataengineer_spark.operators.order import (
+    global_cumsum,
+    global_row_index,
+)
+
 
 def _pav(y: np.ndarray, w: np.ndarray) -> np.ndarray:
     """Weighted PAV over y in given order: non-decreasing fit that
@@ -215,7 +220,6 @@ def roc_auc(
     score_col: str,
     label_col: str,
     round_to: int = 6,
-    distributed: bool = False,
 ) -> DataFrame:
     """Exact ROC-AUC via the rank-sum identity (probabilistic
     interpretation: P(score⁺ > score⁻) + ½P(tie)), tie-handled with
@@ -223,67 +227,30 @@ def roc_auc(
     AUC = (Σ ranks⁺ − n⁺(n⁺+1)/2) / (n⁺ n⁻). Returns
     (auc, gini, n_pos, n_neg).
 
-    Default path: one pooled rank window + one aggregate. The unkeyed
-    rank window is a single-task sort — fine for evaluation-sized
-    scoring sets, the canonical scale bug beyond that.
-
-    ``distributed=True`` computes the SAME value with no unkeyed
-    window anywhere: group by distinct score (combinable hash agg),
-    then the average rank of every row at score s is
-    ``cum_count_before(s) + (cnt(s)+1)/2`` — an exact two-phase
-    global cumsum (operators/order.py:global_cumsum) over the
-    distinct-score table, which is both smaller than the input and
-    range-partitioned rather than single-task. Use this for
-    billion-row scoring sets."""
-    from pyspark.sql import functions as F
-
+    Group by distinct score (combinable hash agg); the average rank
+    of every row at score s is ``cum_count_before(s) + (cnt(s)+1)/2``
+    — a ``global_cumsum`` over the distinct-score table, which is
+    smaller than the input."""
     y = F.col(label_col).cast("int")
-    if distributed:
-        from pipeline_dataengineer_spark.operators.order import (
-            global_cumsum,
+    g = (
+        df.select(
+            y.alias("__y"),
+            F.col(score_col).cast("double").alias("__s"),
         )
-
-        g = (
-            df.select(
-                y.alias("__y"),
-                F.col(score_col).cast("double").alias("__s"),
-            )
-            .groupBy("__s")
-            .agg(
-                F.count(F.lit(1)).alias("__cnt"),
-                F.sum("__y").alias("__pos"),
-            )
+        .groupBy("__s")
+        .agg(
+            F.count(F.lit(1)).alias("__cnt"),
+            F.sum("__y").alias("__pos"),
         )
-        gc = global_cumsum(g, ["__s"], ["__cnt"], exclusive=True)
-        # avg rank at s = rank_first + (cnt-1)/2 = cum_before + (cnt+1)/2
-        avg_rank = F.col("cum___cnt") + (F.col("__cnt") + 1) / 2.0
-        agg = gc.agg(
-            F.sum(F.col("__pos") * avg_rank).alias("__rp"),
-            F.sum("__pos").alias("n_pos"),
-            F.sum(F.col("__cnt") - F.col("__pos")).alias("n_neg"),
-        )
-    else:
-        w = Window.orderBy("__s")
-        ranked = df.select(
-            y.alias("__y"), F.col(score_col).cast("double").alias("__s")
-        ).select(
-            "__y",
-            (
-                F.rank().over(w)
-                + (
-                    F.count(F.lit(1)).over(
-                        Window.partitionBy("__s")
-                    )
-                    - 1
-                )
-                / 2.0
-            ).alias("__r"),
-        )
-        agg = ranked.agg(
-            F.sum(F.when(F.col("__y") == 1, F.col("__r"))).alias("__rp"),
-            F.sum(F.when(F.col("__y") == 1, 1).otherwise(0)).alias("n_pos"),
-            F.sum(F.when(F.col("__y") == 0, 1).otherwise(0)).alias("n_neg"),
-        )
+    )
+    gc = global_cumsum(g, ["__s"], ["__cnt"], exclusive=True)
+    # avg rank at s = rank_first + (cnt-1)/2 = cum_before + (cnt+1)/2
+    avg_rank = F.col("cum___cnt") + (F.col("__cnt") + 1) / 2.0
+    agg = gc.agg(
+        F.sum(F.col("__pos") * avg_rank).alias("__rp"),
+        F.sum("__pos").alias("n_pos"),
+        F.sum(F.col("__cnt") - F.col("__pos")).alias("n_neg"),
+    )
     auc = F.try_divide(
         F.col("__rp")
         - F.col("n_pos").cast("double")
@@ -304,7 +271,6 @@ def average_precision(
     score_col: str,
     label_col: str,
     round_to: int = 6,
-    distributed: bool = False,
 ) -> DataFrame:
     """Average Precision (the area under the precision-recall curve,
     step-interpolated the sklearn way): rank by score DESCENDING with
@@ -313,57 +279,26 @@ def average_precision(
     AP), then AP = Σ_{hits k} precision@k / n_pos. Returns
     (ap, n_pos, n).
 
-    Default path: one unkeyed window pass + one aggregate —
-    evaluation-sized data only. ``distributed=True`` computes the
-    SAME value via operators/order.py:global_cumsum on the order
-    (score desc, label asc): the global row index gives k, the
-    running label sum gives hits@k, no unkeyed window anywhere. Rows
-    tied on (score, label) are interchangeable in the AP sum, so the
+    One ``global_cumsum`` on the order (score desc, label asc): its
+    row index gives k, the running label sum gives hits@k. Rows tied
+    on (score, label) are interchangeable in the AP sum, so the
     scan's arbitrary within-tie order cannot change the result."""
-    from pyspark.sql import functions as F
-
-    if distributed:
-        from pipeline_dataengineer_spark.operators.order import (
-            global_cumsum,
-        )
-
-        base = df.select(
-            F.col(label_col).cast("int").alias("__y"),
-            F.col(score_col).cast("double").alias("__s"),
-        )
-        gc = global_cumsum(
-            base,
-            [F.col("__s").desc(), F.col("__y").asc()],
-            ["__y"],
-            index_col="__k0",
-        )
-        scored = gc.select(
-            "__y",
-            F.when(
-                F.col("__y") == 1,
-                F.col("cum___y") / (F.col("__k0") + 1).cast("double"),
-            ).alias("__p"),
-        )
-        return scored.agg(
-            F.round(
-                F.try_divide(F.sum("__p"), F.sum("__y").cast("double")),
-                round_to,
-            ).alias("ap"),
-            F.sum("__y").cast("long").alias("n_pos"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    w = Window.orderBy(F.col("__s").desc(), F.col("__y").asc())
-    ranked = df.select(
+    base = df.select(
         F.col(label_col).cast("int").alias("__y"),
         F.col(score_col).cast("double").alias("__s"),
-    ).select(
-        "__y",
-        F.row_number().over(w).alias("__k"),
     )
-    wk = Window.orderBy("__k").rowsBetween(Window.unboundedPreceding, 0)
-    prec_at_k = F.sum("__y").over(wk) / F.col("__k")
-    scored = ranked.withColumn(
-        "__p", F.when(F.col("__y") == 1, prec_at_k)
+    gc = global_cumsum(
+        base,
+        [F.col("__s").desc(), F.col("__y").asc()],
+        ["__y"],
+        index_col="__k0",
+    )
+    scored = gc.select(
+        "__y",
+        F.when(
+            F.col("__y") == 1,
+            F.col("cum___y") / (F.col("__k0") + 1).cast("double"),
+        ).alias("__p"),
     )
     return scored.agg(
         F.round(
@@ -390,14 +325,11 @@ def lift_gains(
     positive rate, and ``lift`` = cumulative rate / base rate.
 
     Bucket assignment is ``floor(rank · b / N)`` over the EXACT global
-    order (score desc, id asc) — computed with the distributed
-    two-phase index (order.global_row_index), never a single-task
-    ``row_number() OVER (ORDER BY …)``. Everything after the index is
+    order (score desc, id asc) — ``order.global_row_index``, which
+    never sorts a large input in a single task. Everything after the index is
     a ``n_buckets``-row aggregate; the cumulative window runs over
     those ≤ b rows on the driver side of a partial agg, not the facts.
     """
-    from pipeline_dataengineer_spark.operators.order import global_row_index
-
     base = df.select(
         (-F.col(score_col).cast("double")).alias("__neg"),
         F.col(id_col).alias("__id"),
@@ -526,9 +458,7 @@ def grouped_roc_auc(
     needs (AUC by language, by source, by time bucket). Same
     tie-corrected rank-sum identity as ``roc_auc``, but every window
     is PARTITIONED by the group — groups rank independently in
-    parallel, so this is scale-safe with no distributed= switch
-    needed (the unkeyed-window hazard only exists for the global
-    variant)."""
+    parallel, so no single-task stage exists at any group count."""
     from pyspark.sql import functions as F
 
     y = F.col(label_col).cast("int")

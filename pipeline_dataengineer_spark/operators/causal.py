@@ -16,14 +16,16 @@ sequential (each match consumes a control), while with-replacement
 nearest-neighbor is per-row independent — the LAST sorted-merge
 trick an engine can parallelize: sort the union by score once, and
 each treated row's nearest control is either the closest control at
-or below (a running last_value) or the closest above (the reverse) —
-two cumulative windows, no join at all.
+or below (a running last value) or the closest above (the reverse) —
+two ordered forward-fills, no join at all.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pipeline_dataengineer_spark.operators.order import global_running_last
 
 
 def propensity_match_att(
@@ -33,121 +35,70 @@ def propensity_match_att(
     score_col: str,
     caliper: float | None = None,
     round_to: int = 6,
-    distributed: bool = False,
 ) -> DataFrame:
     """Average Treatment effect on the Treated by nearest-neighbor
     propensity matching WITH replacement: every treated unit pairs
     with the control whose score is closest (ties to the lower
     score; among controls with IDENTICAL scores the tie-break is
     deterministic — max outcome on the below side, min outcome on
-    the above side, enforced by ordering on struct(score, outcome)
-    rather than score alone); pairs with score distance >
-    ``caliper`` are dropped (reported). Returns ONE row:
+    the above side); pairs with score distance > ``caliper`` are
+    dropped (reported). Returns ONE row:
     (n_treated, n_matched, n_controls, att, mean_abs_score_gap).
 
-    Scale shape: ONE global sort of (score) over the union — each
-    treated row then reads its nearest control below via a running
-    max_by over controls-so-far, and its nearest above from the
-    mirrored descending window. No join, no per-row search; the
-    classic two-pass sorted-merge as window algebra.
-
-    The default path's two windows are UNKEYED — a single-task sort,
-    fine for evaluation-sized matching sets. ``distributed=True``
-    computes the SAME matches with no unkeyed window: controls
-    collapse to one row per distinct score (hash agg; max outcome =
-    the below-side tie-break, min outcome = the above-side one), the
-    treated rows union in, and each direction's nearest control is a
-    two-phase ordered forward-fill
-    (operators/order.py:global_running_last) over a pinned
-    distributed range sort — partition-sized state only."""
+    Scale shape: controls collapse to one row per distinct score
+    (hash agg; max outcome = the below-side tie-break, min outcome =
+    the above-side one), the treated rows union in, and each
+    direction's nearest control is an ordered forward-fill
+    (``order.global_running_last``) over the union — no join, no
+    per-row search; the classic two-pass sorted-merge."""
     t = F.col(treat_col).cast("int")
     base = df.select(
         t.alias("__t"),
         F.col(outcome_col).cast("double").alias("__y"),
         F.col(score_col).cast("double").alias("__s"),
     ).filter(F.col("__s").isNotNull() & F.col("__y").isNotNull())
-    if distributed:
-        from pipeline_dataengineer_spark.operators.order import (
-            global_running_last,
+    ctrl_g = (
+        base.filter(F.col("__t") == 0)
+        .groupBy("__s")
+        .agg(
+            F.max("__y").alias("__cy_dn"),
+            F.min("__y").alias("__cy_up"),
         )
-
-        # one row per distinct control score; max/min outcome are
-        # exactly the struct(score, outcome) tie-breaks of the
-        # window path (max struct picks max y among tied max s;
-        # min struct picks min y among tied min s)
-        ctrl_g = (
-            base.filter(F.col("__t") == 0)
-            .groupBy("__s")
-            .agg(
-                F.max("__y").alias("__cy_dn"),
-                F.min("__y").alias("__cy_up"),
-            )
-            .select(
-                F.lit(0).alias("__t"),
-                F.lit(None).cast("double").alias("__y"),
-                "__s",
-                "__cy_dn",
-                "__cy_up",
-            )
-        )
-        treated = base.filter(F.col("__t") == 1).select(
-            "__t",
-            "__y",
+        .select(
+            F.lit(0).alias("__t"),
+            F.lit(None).cast("double").alias("__y"),
             "__s",
-            F.lit(None).cast("double").alias("__cy_dn"),
-            F.lit(None).cast("double").alias("__cy_up"),
+            "__cy_dn",
+            "__cy_up",
         )
-        un = treated.unionByName(ctrl_g).withColumn(
-            "__is_ctrl", F.col("__t") == 0
-        )
-        up = global_running_last(
-            un,
-            [F.col("__s").asc(), F.col("__t").asc()],
-            ["__s", "__cy_dn"],
-            "__is_ctrl",
-            out_cols=["__bs", "__by"],
-        )
-        dn = global_running_last(
-            up,
-            [F.col("__s").desc(), F.col("__t").asc()],
-            ["__s", "__cy_up"],
-            "__is_ctrl",
-            out_cols=["__as", "__ay"],
-        )
-        cand = dn.filter(F.col("__t") == 1).select(
-            "__t", "__y", "__s", "__bs", "__by", "__as", "__ay"
-        )
-    else:
-        w_up = Window.orderBy(
-            F.col("__s").asc(), F.col("__t").asc()
-        ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        w_down = Window.orderBy(
-            F.col("__s").desc(), F.col("__t").asc()
-        ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        # nearest control at-or-below / at-or-above by score; the
-        # outcome rides along inside a struct(score, outcome) so
-        # lexicographic max/min gives a DETERMINISTIC tie-break when
-        # two controls share a score (max_by keyed on the bare score
-        # would pick an engine-arbitrary outcome among ties)
-        ctrl_sy = F.when(
-            F.col("__t") == 0,
-            F.struct(F.col("__s").alias("s"), F.col("__y").alias("y")),
-        )
-        below = F.max(ctrl_sy).over(w_up)
-        below_s = below["s"]
-        below_y = below["y"]
-        above = F.min(ctrl_sy).over(w_down)
-        above_s = above["s"]
-        above_y = above["y"]
-        cand = base.select(
-            "__t",
-            "__y",
-            "__s",
-            below_s.alias("__bs"),
-            below_y.alias("__by"),
-            above_s.alias("__as"),
-            above_y.alias("__ay"),
-        ).filter(F.col("__t") == 1)
+    )
+    treated = base.filter(F.col("__t") == 1).select(
+        "__t",
+        "__y",
+        "__s",
+        F.lit(None).cast("double").alias("__cy_dn"),
+        F.lit(None).cast("double").alias("__cy_up"),
+    )
+    un = treated.unionByName(ctrl_g).withColumn(
+        "__is_ctrl", F.col("__t") == 0
+    )
+    up = global_running_last(
+        un,
+        [F.col("__s").asc(), F.col("__t").asc()],
+        ["__s", "__cy_dn"],
+        "__is_ctrl",
+        out_cols=["__bs", "__by"],
+    )
+    dn = global_running_last(
+        up,
+        [F.col("__s").desc(), F.col("__t").asc()],
+        ["__s", "__cy_up"],
+        "__is_ctrl",
+        out_cols=["__as", "__ay"],
+    )
+    cand = dn.filter(F.col("__t") == 1).select(
+        "__t", "__y", "__s", "__bs", "__by", "__as", "__ay"
+    )
     d_below = F.col("__s") - F.col("__bs")
     d_above = F.col("__as") - F.col("__s")
     use_below = F.col("__bs").isNotNull() & (
@@ -370,10 +321,10 @@ def quantile_treatment_effects(
     individual effect only under rank invariance — stated, not
     hidden).
 
-    Exact discrete per-arm quantiles via global_exact_quantiles'
-    two-phase distributed sort — no single-task ORDER BY, no
-    approx_percentile error bound; cost = one distributed sort per
-    arm, each quantile reaching the driver as one plucked row.
+    Exact discrete per-arm quantiles via global_exact_quantiles — no
+    approx_percentile error bound; cost = one sort per arm (sized by
+    operators/order.py), each quantile reaching the driver as one
+    plucked row.
     Returns (q, y_treated, y_control, qte)."""
     t = F.col(treat_col).cast("int")
     from pipeline_dataengineer_spark.operators.robust import (

@@ -661,11 +661,10 @@ def pack_concat_chunks(
     emits every (doc, window) overlap span — use it when the
     consumer slices the actual spans rather than replaying offsets.
 
-    Shape: ONE two-phase global cumsum (operators/order.py:
-    global_cumsum) gives each doc its stream offset; the per-doc
-    window list is a ``sequence()`` explode of at most
-    ceil(len/budget)+1 elements. No unkeyed window, no collect,
-    no Python. Zero-length docs are dropped (they own no tokens)."""
+    Shape: ONE global cumsum (operators/order.py:global_cumsum)
+    gives each doc its stream offset; the per-doc window list is a
+    ``sequence()`` explode of at most ceil(len/budget)+1 elements.
+    Zero-length docs are dropped (they own no tokens)."""
     from pipeline_dataengineer_spark.operators.order import global_cumsum
 
     order_cols = order_cols or [id_col]

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pipeline_dataengineer_spark.operators.joins import plan_bytes
+
 # Largest signature table (Catalyst's sizeInBytes) for which
 # minhash_lsh_near_duplicates keeps the plain pairs-join verify shape.
 _SIG_PLAIN_JOIN_MAX_BYTES = 64 << 20
@@ -23,13 +25,6 @@ _SIG_PLAIN_JOIN_MAX_BYTES = 64 << 20
 # relation) that minhash_lsh_near_duplicates broadcasts into both
 # verify legs.
 _PAIR_BROADCAST_MAX_BYTES = 100 << 20
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """Catalyst's sizeInBytes of ``df``'s optimized plan: file bytes
-    through Hadoop for a file scan, measured bytes for a materialized
-    cache. No job runs."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def dedup_exact(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
@@ -433,13 +428,15 @@ def minhash_lsh_near_duplicates(
         #    where a giant broadcast would OOM. The bound is on bytes,
         #    not rows: string ids make a pair many times wider than
         #    two bigints.
-        if _plan_bytes(sig_df) <= _SIG_PLAIN_JOIN_MAX_BYTES:
+        sig_bytes = plan_bytes(sig_df)
+        if sig_bytes is not None and sig_bytes <= _SIG_PLAIN_JOIN_MAX_BYTES:
             verified = pairs.join(a, "id_a").join(b, "id_b")
         else:
             pairs = pairs.persist()
             to_unpersist.append(pairs)
             pairs.count()
-            if _plan_bytes(pairs) <= _PAIR_BROADCAST_MAX_BYTES:
+            pair_bytes = plan_bytes(pairs)
+            if pair_bytes is not None and pair_bytes <= _PAIR_BROADCAST_MAX_BYTES:
                 pa = a.join(F.broadcast(pairs), "id_a")
                 pb = b.join(F.broadcast(pairs), "id_b")
                 verified = pa.join(pb, ["id_a", "id_b"])

@@ -4,9 +4,9 @@
 - gini_coefficient: the classic [0, 1] concentration index via the
   rank formula G = 2·Σᵢ i·x₍ᵢ₎ / (n·Σx) − (n+1)/n over the ascending
   sort. Grouped mode ranks inside each group (keyed windows — scale
-  safe); ungrouped mode NEVER uses an unkeyed window — the global
-  rank comes from the two-phase distributed cumsum
-  (operators/order.py:global_cumsum).
+  safe); in ungrouped mode the global rank comes from
+  operators/order.py:global_cumsum, which never sorts a large input
+  in a single task.
 - lorenz_curve: the cumulative-share points behind the Gini —
   (population share p, value share L(p)) at n_points evenly spaced
   quantile cuts, read off the same global cumsum.
@@ -78,8 +78,8 @@ def lorenz_curve(
     rows (point, n_rows, value_share) where value_share = (sum of the
     floor(n·k/n_points) smallest values) / total. value_share ≤ point
     everywhere, with equality iff the distribution is flat; the area
-    between the curves is Gini/2. Global rank + prefix sums via the
-    two-phase cumsum — no unkeyed window."""
+    between the curves is Gini/2. Global rank + prefix sums via
+    ``global_cumsum``."""
     from pipeline_dataengineer_spark.operators.order import global_cumsum
 
     v = F.col(value_col).cast("double")

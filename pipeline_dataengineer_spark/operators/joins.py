@@ -13,6 +13,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def plan_bytes(df: DataFrame) -> int | None:
+    """Catalyst's sizeInBytes estimate of ``df``'s optimized plan: file
+    bytes through Hadoop for a file scan, measured bytes for a
+    materialized cache. No job runs. ``None`` when Spark has no real
+    statistic: it then reports a sentinel at or above 2^60 (or the
+    call fails, as on Spark Connect)."""
+    try:
+        size = int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:
+        return None
+    return size if 0 <= size < (1 << 60) else None
+
+
 def broadcast_if_small(
     df: DataFrame,
     max_rows: int = 1_000_000,
@@ -22,24 +37,17 @@ def broadcast_if_small(
 
     At cluster scale a blind ``F.broadcast`` on a 'small' side that
     turned out to be 50 GB OOMs every executor. The gate uses the
-    optimizer's sizeInBytes ESTIMATE (file sizes + column stats —
-    free, no job) when the plan exposes one; only when no statistics
-    are available (pure in-memory frames, Spark Connect) does it fall
-    back to a count job. At 100 TB the estimate path means gating a
-    maybe-small dimension never costs a scan of it. (AQE also
-    auto-broadcasts under spark.sql.autoBroadcastJoinThreshold; this
-    is the explicit variant for when the caller knows better.)
+    optimizer's size estimate (``plan_bytes`` — free, no job) when
+    the plan exposes one; only when no statistics are available
+    (pure in-memory frames, Spark Connect) does it fall back to a
+    count job. At 100 TB the estimate path means gating a maybe-small
+    dimension never costs a scan of it. (AQE also auto-broadcasts
+    under spark.sql.autoBroadcastJoinThreshold; this is the explicit
+    variant for when the caller knows better.)
     """
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        # Catalyst reports Long.MaxValue-ish sentinels when it has no
-        # real statistics; treat absurd values as "unknown".
-        if 0 <= size < (1 << 60):
-            return F.broadcast(df) if size <= max_bytes else df
-    except Exception:
-        pass
+    size = plan_bytes(df)
+    if size is not None:
+        return F.broadcast(df) if size <= max_bytes else df
     return F.broadcast(df) if df.count() <= max_rows else df
 
 

@@ -1,21 +1,31 @@
-"""Global total-order utilities: distributed row indexing and
+"""Global total-order utilities: row indexing, running scans and
 sorted-neighborhood blocking.
 
 ``row_number() OVER (ORDER BY ...)`` with no partition key funnels
 the whole table through ONE task — the canonical scale bug (Spark
-itself warns). The distributed answer is the classic two-phase
-global index:
+itself warns). Each primitive here (``global_row_index``,
+``global_cumsum``, ``global_cummin``, ``global_running_last``)
+therefore picks one of two plans for the same rows:
 
-1. range-repartition + sort within partitions on the order key
-   (Spark's own distributed sort — no single-task stage anywhere);
-2. count rows per partition (a partition-count-sized aggregate),
-   broadcast the cumulative offsets, and add each partition's offset
-   to its local running index (mapInPandas with a per-partition
-   counter).
+- **one task** when Catalyst's size estimate of the input
+  (``joins.plan_bytes``, no job) is at most ``_ONE_TASK_MAX_BYTES``
+  — Spark's default advisory partition size, one task's worth of
+  input: a single native unkeyed window (``row_number``, ``sum``,
+  ``min``, ``last … ignorenulls``), no eager job;
+- **two phases** otherwise, including an unknown estimate and an
+  explicit ``num_partitions`` (a requested layout):
+  1. range-repartition + sort within partitions on the order key
+     (Spark's own distributed sort), pinned by ``localCheckpoint``;
+  2. reduce each partition to a summary (row count, total, minimum
+     or last valid row — a partition-count-sized collect), fold the
+     summaries driver-side into per-partition carries, and scan each
+     partition seeded with its carry.
 
-The result is the exact global 0-based index of the total order
-``order_cols`` (callers must make the order total — include a
-tie-break id), computed with nothing but partition-sized state.
+The result is the exact answer over the total order ``order_cols``
+computed with nothing but partition-sized state at any size. Rows
+tied on the order keep an arbitrary-but-fixed relative order within
+one evaluation; callers needing tie-invariance make the order total
+or consume only tie-invariant functionals (as AP / AUC do).
 
 Sorted-neighborhood blocking (the other classic ER blocking besides
 FastSS edit-distance and LSH): sort records by a blocking key and
@@ -28,12 +38,41 @@ blocks are ordinary AQE-splittable skew.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import bisect
+import math
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pipeline_dataengineer_spark.operators.joins import plan_bytes
+
+# Largest size estimate (bytes) an order primitive runs as one
+# unkeyed window: spark.sql.adaptive.advisoryPartitionSizeInBytes'
+# default, i.e. one task's worth of input.
+_ONE_TASK_MAX_BYTES = 64 << 20
+
+
+def _one_task(df: DataFrame, num_partitions: int | None) -> bool:
+    if num_partitions is not None:
+        return False
+    size = plan_bytes(df)
+    return size is not None and size <= _ONE_TASK_MAX_BYTES
+
+
+def _order_exprs(order_exprs) -> list:
+    return [F.col(c) if isinstance(c, str) else c for c in order_exprs]
+
+
+def _running(order_exprs, exclusive: bool = False):
+    """The ROWS frame from the first row to the current one (or to the
+    one before it) over the total order."""
+    return Window.orderBy(*_order_exprs(order_exprs)).rowsBetween(
+        Window.unboundedPreceding, -1 if exclusive else Window.currentRow
+    )
 
 
 def global_row_index(
@@ -44,6 +83,13 @@ def global_row_index(
 ) -> DataFrame:
     """Add the exact 0-based position of each row in the total order
     ``order_cols`` (which must be unique per row — include an id)."""
+    if _one_task(df, num_partitions):
+        return df.withColumn(
+            index_col,
+            (F.row_number().over(Window.orderBy(*order_cols)) - 1).cast(
+                "long"
+            ),
+        )
     n_part = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ordered = df.repartitionByRange(
         n_part, *[F.col(c) for c in order_cols]
@@ -55,14 +101,12 @@ def global_row_index(
     # (observed: permuted indices under a second evaluation). The
     # checkpoint pins one materialized partitioning for both passes.
     #
-    # Round 10 (guide §4): the per-partition local index needs no
-    # Python pass — ``monotonically_increasing_id`` IS
+    # The per-partition local index needs no Python pass:
+    # ``monotonically_increasing_id`` IS
     # (partition_id << 33) + 0-based-row-counter-in-partition-order,
     # computed BEFORE the checkpoint so it is stored with the pinned
-    # data. The old mapInPandas round-tripped every checkpointed row
-    # through Arrow just to attach a counter; now both the partition
-    # id and the local index are bit-slices of a stored long, and the
-    # offset lookup is a literal map (no join operator at all).
+    # data; both the partition id and the local index are bit-slices
+    # of a stored long, and the offset lookup is a literal array.
     with_mid = ordered.withColumn(
         "__mid", F.monotonically_increasing_id()
     ).localCheckpoint()
@@ -75,20 +119,14 @@ def global_row_index(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
     }
-    offsets, acc = {}, 0
-    for p in sorted(sizes):
-        offsets[p] = acc
-        acc += sizes[p]
-    # Offset lookup (round 11, VERDICT r10 item 6): the round-10
-    # `element_at(create_map(...), pid)` literal map LINEAR-SCANS its
-    # keys per row — O(P) work per row and O(P) plan size. Dense
-    # literal ARRAY indexing is O(1) per row (partition ids are the
-    # dense RDD partition indices 0..P-1; empty partitions get their
-    # running offset so the array stays index-addressable). Past
-    # ~1024 partitions the plan-size cost of ANY literal wins over
-    # its no-join benefit, so large layouts fall back to a broadcast
-    # hash join on the partition id — same O(1) probe, plan size
-    # O(1), one extra broadcast of a partition-count-sized table.
+    # Offset lookup: dense literal ARRAY indexing is O(1) per row
+    # (partition ids are the dense RDD partition indices 0..P-1;
+    # empty partitions get their running offset so the array stays
+    # index-addressable). Past ~1024 partitions the plan-size cost of
+    # ANY literal wins over its no-join benefit, so large layouts
+    # fall back to a broadcast hash join on the partition id — same
+    # O(1) probe, plan size O(1), one extra broadcast of a
+    # partition-count-sized table.
     n_parts_total = max(sizes, default=-1) + 1
     dense, acc2 = [], 0
     for p in range(n_parts_total):
@@ -126,13 +164,89 @@ def _pinned_range_sort(df: DataFrame, order_exprs, num_partitions=None):
     n_part = (
         num_partitions or df.sparkSession.sparkContext.defaultParallelism
     )
-    exprs = [F.col(c) if isinstance(c, str) else c for c in order_exprs]
+    exprs = _order_exprs(order_exprs)
     ordered = df.repartitionByRange(n_part, *exprs).sortWithinPartitions(
         *exprs
     )
     return ordered.withColumn(
         "__pid", F.spark_partition_id()
     ).localCheckpoint()
+
+
+def _nan_flag(c: str) -> str:
+    return f"__nan_{c}"
+
+
+def _is_float(dt: T.DataType) -> bool:
+    return isinstance(dt, (T.FloatType, T.DoubleType))
+
+
+def _scan_partitions(
+    pinned: DataFrame,
+    new_fields: list[T.StructField],
+    init: Callable[[int], object],
+    step: Callable[[pd.DataFrame, object], object],
+) -> DataFrame:
+    """Phase two over a pinned sort: ``init(pid)`` seeds each
+    partition's scan state from its carry, and ``step(pdf, state)``
+    adds ``new_fields`` to one Arrow batch (in partition order) and
+    returns the state for the next batch. Drops ``__pid``.
+
+    pandas holds NULL and NaN alike as NaN, and Arrow reads every NaN
+    back as NULL. So each floating column crosses with a boolean
+    ``_nan_flag`` column that tells them apart: set here for input
+    columns, set by ``step`` for each floating column it adds, and
+    turned back into NaN after the scan."""
+    floats = [f for f in pinned.schema.fields if _is_float(f.dataType)]
+    floats_new = [f for f in new_fields if _is_float(f.dataType)]
+    flagged = pinned.select(
+        "*", *[F.isnan(f.name).alias(_nan_flag(f.name)) for f in floats]
+    )
+    schema = T.StructType(
+        flagged.schema.fields
+        + new_fields
+        + [
+            T.StructField(_nan_flag(f.name), T.BooleanType())
+            for f in floats_new
+        ]
+    )
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        state, seeded = None, False
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            if not seeded:
+                state, seeded = init(int(pdf["__pid"].iloc[0])), True
+            pdf = pdf.copy()
+            state = step(pdf, state)
+            yield pdf
+
+    scanned = flagged.mapInPandas(scan, schema)
+    restored = {
+        f.name: F.when(
+            F.col(_nan_flag(f.name)), F.lit(float("nan")).cast(f.dataType)
+        )
+        .otherwise(F.col(f.name))
+        .alias(f.name)
+        for f in floats + floats_new
+    }
+    return scanned.select(
+        *[
+            restored.get(f.name, F.col(f.name))
+            for f in list(pinned.schema.fields) + new_fields
+            if f.name != "__pid"
+        ]
+    )
+
+
+def _values(pdf: pd.DataFrame, c: str) -> tuple[np.ndarray, np.ndarray]:
+    """Column ``c`` of one batch as float64 values and its NULL mask."""
+    v = pdf[c].astype("float64").to_numpy()
+    null = np.isnan(v)
+    if _nan_flag(c) in pdf:
+        null &= ~pdf[_nan_flag(c)].to_numpy(dtype=bool)
+    return v, null
 
 
 def _cum_out_type(dt: T.DataType) -> T.DataType:
@@ -156,108 +270,96 @@ def global_cumsum(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact global running sums (and optionally the 0-based global
-    row index) over the total order ``order_exprs`` — the distributed
-    replacement for ``sum(x) OVER (ORDER BY ... ROWS UNBOUNDED
-    PRECEDING)``, which funnels the table through ONE task.
+    row index) over the order ``order_exprs`` — ``sum(x) OVER (ORDER
+    BY ... ROWS UNBOUNDED PRECEDING)`` at any size. Adds
+    ``{prefix}{col}`` per sum col (inclusive of the current row unless
+    ``exclusive=True``) and ``index_col`` if given. NULLs in sum cols
+    count as 0; a NaN makes every later sum NaN. Numeric sum cols
+    only; integral inputs produce long cumsums, everything else
+    double. Double sums of the two plans agree up to floating-point
+    association (exactly, for values whose sums are exact).
 
-    Two-phase, same shape as ``global_row_index``: distributed range
-    sort (pinned by localCheckpoint), per-partition totals (a
-    partition-count-sized collect), broadcast exclusive offsets into
-    a mapInPandas local cumsum. Adds ``{prefix}{col}`` per sum col
-    (inclusive of the current row unless ``exclusive=True``) and
-    ``index_col`` if given. NULLs in sum cols count as 0. Ties in
-    ``order_exprs`` get an arbitrary-but-fixed relative order within
-    the sort — callers needing tie-invariance must make the order
-    total or (like AP / AUC) consume only tie-invariant functionals.
-
-    Numeric sum cols only; integral inputs produce long cumsums,
-    everything else double."""
-    import numpy as np
+    Two-phase plan: per-partition totals and row counts (one
+    partition-count-sized collect) become exclusive carries for a
+    mapInPandas local cumsum."""
+    out_types = {
+        c: _cum_out_type(df.schema[c].dataType) for c in sum_cols
+    }
+    if _one_task(df, num_partitions):
+        frame = _running(order_exprs, exclusive)
+        cols = [
+            F.coalesce(
+                F.sum(F.col(c).cast(t)).over(frame), F.lit(0).cast(t)
+            ).alias(prefix + c)
+            for c, t in out_types.items()
+        ]
+        if index_col is not None:
+            w = Window.orderBy(*_order_exprs(order_exprs))
+            cols.append(
+                (F.row_number().over(w) - 1).cast("long").alias(index_col)
+            )
+        return df.select("*", *cols)
 
     pinned = _pinned_range_sort(df, order_exprs, num_partitions)
-    # per-partition totals -> exclusive offsets (tiny collect)
     part_rows = (
         pinned.groupBy("__pid")
         .agg(
-            *[
-                F.sum(F.col(c).cast("double")).alias(c)
-                for c in sum_cols
-            ]
+            F.count(F.lit(1)).alias("__rows"),
+            *[F.sum(F.col(c).cast(t)).alias(c) for c, t in out_types.items()],
         )
         .collect()
     )
-    offsets: dict[int, list[float]] = {}
-    acc = [0.0] * len(sum_cols)
+    # per partition: (rows before it, sums before it)
+    carry: dict[int, tuple[int, list]] = {}
+    rows, acc = 0, [0] * len(sum_cols)
     for r in sorted(part_rows, key=lambda r: r["__pid"]):
-        offsets[r["__pid"]] = list(acc)
-        for i, c in enumerate(sum_cols):
-            acc[i] += float(r[c] or 0.0)
+        carry[r["__pid"]] = (rows, list(acc))
+        rows += r["__rows"]
+        acc = [
+            a + (r[c] if r[c] is not None else 0)
+            for a, c in zip(acc, sum_cols)
+        ]
 
-    in_types = {f.name: f.dataType for f in pinned.schema.fields}
-    out_fields = list(pinned.schema.fields) + [
-        T.StructField(prefix + c, _cum_out_type(in_types[c]))
-        for c in sum_cols
+    def step(pdf: pd.DataFrame, state):
+        seen, running = state
+        for i, (c, t) in enumerate(out_types.items()):
+            longs = isinstance(t, T.LongType)
+            if longs:
+                v = pdf[c].fillna(0).astype("int64").to_numpy()
+                cs = np.cumsum(np.r_[np.int64(running[i]), v])
+            else:
+                v, null = _values(pdf, c)
+                cs = np.cumsum(np.r_[float(running[i]), np.where(null, 0.0, v)])
+            out = cs[:-1] if exclusive else cs[1:]
+            pdf[prefix + c] = out
+            if not longs:
+                pdf[_nan_flag(prefix + c)] = np.isnan(out)
+            running[i] = cs[-1]
+        if index_col is not None:
+            pdf[index_col] = np.arange(seen, seen + len(pdf), dtype="int64")
+        return seen + len(pdf), running
+
+    new_fields = [
+        T.StructField(prefix + c, t) for c, t in out_types.items()
     ]
     if index_col is not None:
-        out_fields.append(T.StructField(index_col, T.LongType()))
-    schema_out = T.StructType(out_fields)
-    want_index = index_col
-    longs = {
-        c for c in sum_cols if isinstance(_cum_out_type(in_types[c]), T.LongType)
-    }
+        new_fields.append(T.StructField(index_col, T.LongType()))
+    return _scan_partitions(
+        pinned,
+        new_fields,
+        lambda pid: (carry[pid][0], list(carry[pid][1])),
+        step,
+    )
 
-    def local_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        running: list[float] | None = None
-        seen = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if running is None:
-                running = list(
-                    offsets.get(int(pdf["__pid"].iloc[0]), acc)
-                )
-            pdf = pdf.copy()
-            for i, c in enumerate(sum_cols):
-                vals = (
-                    pdf[c].astype("float64").fillna(0.0).to_numpy()
-                )
-                cs = np.cumsum(vals) + running[i]
-                if exclusive:
-                    cs = cs - vals
-                pdf[prefix + c] = (
-                    cs.astype("int64") if c in longs else cs
-                )
-                running[i] += float(vals.sum())
-            if want_index is not None:
-                pdf[want_index] = np.arange(
-                    seen, seen + len(pdf), dtype="int64"
-                )
-                seen += len(pdf)
-            yield pdf
 
-    out = pinned.mapInPandas(local_scan, schema_out)
-    if index_col is not None:
-        # partition row-count offsets for the global index
-        sizes = {
-            r["__pid"]: r["cnt"]
-            for r in pinned.groupBy("__pid")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        row_off, racc = {}, 0
-        for pid in sorted(sizes):
-            row_off[pid] = racc
-            racc += sizes[pid]
-        off_df = df.sparkSession.createDataFrame(
-            [(pid, off) for pid, off in row_off.items()],
-            "__pid int, __row_off long",
-        )
-        out = (
-            out.join(F.broadcast(off_df), "__pid")
-            .withColumn(index_col, F.col(index_col) + F.col("__row_off"))
-            .drop("__row_off")
-        )
-    return out.drop("__pid")
+def _spark_min(a, b):
+    """Spark's ``min`` of two values: NULL (None) is skipped, NaN sorts
+    above every number."""
+    if a is None or (b is not None and math.isnan(a)):
+        return b
+    if b is None or math.isnan(b):
+        return a
+    return min(a, b)
 
 
 def global_cummin(
@@ -268,68 +370,62 @@ def global_cummin(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact global running MINIMUM of ``value_cols`` (inclusive of
-    the current row) over the total order ``order_exprs`` — the
-    distributed replacement for ``min(x) OVER (ORDER BY ... ROWS
-    UNBOUNDED PRECEDING)``. Same two-phase shape as global_cumsum:
-    per-partition minima collected, elementwise prefix-minima become
-    broadcast carries, local numpy ``minimum.accumulate`` seeded with
-    the carry. Numeric cols only; NULLs are ignored (treated as +∞ —
-    a row whose prefix is all-NULL gets NULL)."""
-    import numpy as np
+    the current row) over the total order ``order_exprs`` — ``min(x)
+    OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)`` at any size, with
+    Spark's ``min`` semantics: NULLs are skipped (a row whose prefix
+    is all-NULL gets NULL) and NaN sorts above every number. Numeric
+    cols only; outputs are double.
+
+    Two-phase plan: per-partition minima (one partition-count-sized
+    collect) fold into carries for a mapInPandas local
+    ``minimum.accumulate``."""
+    if _one_task(df, num_partitions):
+        frame = _running(order_exprs)
+        return df.select(
+            "*",
+            *[
+                F.min(F.col(c).cast("double")).over(frame).alias(prefix + c)
+                for c in value_cols
+            ],
+        )
 
     pinned = _pinned_range_sort(df, order_exprs, num_partitions)
     part_rows = (
         pinned.groupBy("__pid")
-        .agg(
-            *[
-                F.min(F.col(c).cast("double")).alias(c)
-                for c in value_cols
-            ]
-        )
+        .agg(*[F.min(F.col(c).cast("double")).alias(c) for c in value_cols])
         .collect()
     )
-    carry_in: dict[int, list[float]] = {}
-    acc = [float("inf")] * len(value_cols)
+    carry: dict[int, list] = {}
+    acc: list = [None] * len(value_cols)
     for r in sorted(part_rows, key=lambda r: r["__pid"]):
-        carry_in[r["__pid"]] = list(acc)
+        carry[r["__pid"]] = list(acc)
+        acc = [_spark_min(a, r[c]) for a, c in zip(acc, value_cols)]
+
+    def step(pdf: pd.DataFrame, running: list) -> list:
         for i, c in enumerate(value_cols):
-            v = r[c]
-            if v is not None and float(v) < acc[i]:
-                acc[i] = float(v)
-
-    schema_out = T.StructType(
-        list(pinned.schema.fields)
-        + [T.StructField(prefix + c, T.DoubleType()) for c in value_cols]
-    )
-
-    def local_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        running: list[float] | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if running is None:
-                running = list(
-                    carry_in.get(
-                        int(pdf["__pid"].iloc[0]),
-                        [float("inf")] * len(value_cols),
-                    )
-                )
-            pdf = pdf.copy()
-            for i, c in enumerate(value_cols):
-                vals = (
-                    pdf[c]
-                    .astype("float64")
-                    .fillna(float("inf"))
-                    .to_numpy()
-                )
-                cm = np.minimum(
-                    np.minimum.accumulate(vals), running[i]
-                )
-                pdf[prefix + c] = np.where(np.isinf(cm), np.nan, cm)
+            v, null = _values(pdf, c)
+            real = ~null & ~np.isnan(v)
+            run = running[i]
+            run_real = run is not None and not math.isnan(run)
+            cm = np.minimum.accumulate(
+                np.r_[run if run_real else np.inf, np.where(real, v, np.inf)]
+            )[1:]
+            seen_real = np.logical_or.accumulate(np.r_[run_real, real])[1:]
+            seen = np.logical_or.accumulate(np.r_[run is not None, ~null])[1:]
+            pdf[prefix + c] = np.where(seen_real, cm, np.nan)
+            pdf[_nan_flag(prefix + c)] = seen & ~seen_real
+            if seen_real[-1]:
                 running[i] = float(cm[-1])
-            yield pdf
+            elif seen[-1]:  # only NaNs so far
+                running[i] = math.nan
+        return running
 
-    return pinned.mapInPandas(local_scan, schema_out).drop("__pid")
+    return _scan_partitions(
+        pinned,
+        [T.StructField(prefix + c, T.DoubleType()) for c in value_cols],
+        lambda pid: list(carry[pid]),
+        step,
+    )
 
 
 def global_running_last(
@@ -342,96 +438,82 @@ def global_running_last(
 ) -> DataFrame:
     """For each row, the ``value_cols`` of the LAST at-or-before row
     (in the total order ``order_exprs``) where boolean ``valid_col``
-    is true; NULL when no such row exists. The distributed
-    replacement for ``last_value(x, ignorenulls) OVER (ORDER BY ...
-    ROWS UNBOUNDED PRECEDING)`` — a single-task sort as an unkeyed
-    window.
+    is true; NULL when no such row exists — ``last(struct(values),
+    ignorenulls) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)`` at any
+    size. A valid row's NULL value is carried as NULL. Numeric
+    (castable-to-double) value cols only; outputs are double columns
+    named ``out_cols`` (default ``last_<value_col>``).
 
-    Two-phase over one pinned range sort: pass A reduces each
-    partition to its last valid values (one row per partition,
-    collected), the driver folds those into per-partition carry-in
-    values, pass B forward-fills locally in mapInPandas seeded with
-    the carry. Numeric (castable-to-double) value cols only; outputs
-    are double columns named ``out_cols`` (default
-    ``last_<value_col>``)."""
-    import numpy as np
-
+    Two-phase plan: each partition's last valid row (one JVM
+    aggregate, partition-count-sized collect) folds into per-partition
+    carries for a mapInPandas forward-fill."""
     out_cols = out_cols or [f"last_{c}" for c in value_cols]
-    pinned = _pinned_range_sort(df, order_exprs, num_partitions)
-
-    summary_schema = T.StructType(
-        [T.StructField("__pid", T.IntegerType())]
-        + [
-            T.StructField(f"__v{i}", T.DoubleType())
-            for i in range(len(value_cols))
+    values = F.struct(
+        *[
+            F.col(c).cast("double").alias(f"v{i}")
+            for i, c in enumerate(value_cols)
         ]
-        + [T.StructField("__has", T.BooleanType())]
     )
-
-    def last_valid(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid, vals = None, None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            m = pdf[pdf[valid_col].fillna(False).astype(bool)]
-            if len(m):
-                vals = [float(m[c].iloc[-1]) for c in value_cols]
-        if pid is not None:
-            row = {"__pid": pid, "__has": vals is not None}
-            for i in range(len(value_cols)):
-                row[f"__v{i}"] = vals[i] if vals is not None else None
-            yield pd.DataFrame(
-                [row],
-                columns=["__pid"]
-                + [f"__v{i}" for i in range(len(value_cols))]
-                + ["__has"],
+    if _one_task(df, num_partitions):
+        last = F.last(F.when(F.col(valid_col), values), ignorenulls=True)
+        return (
+            df.withColumn("__last", last.over(_running(order_exprs)))
+            .select(
+                "*",
+                *[
+                    F.col("__last")[f"v{i}"].alias(o)
+                    for i, o in enumerate(out_cols)
+                ],
             )
+            .drop("__last")
+        )
 
-    summaries = sorted(
-        pinned.mapInPandas(last_valid, summary_schema).collect(),
-        key=lambda r: r["__pid"],
+    pinned = _pinned_range_sort(df, order_exprs, num_partitions)
+    # the checkpointed rows read back in sort order, so the running id
+    # orders them within each partition
+    lasts = (
+        pinned.select(
+            "__pid",
+            F.monotonically_increasing_id().alias("__pos"),
+            values.alias("__v"),
+            F.col(valid_col),
+        )
+        .filter(F.col(valid_col))
+        .groupBy("__pid")
+        .agg(F.max_by("__v", "__pos").alias("__v"))
+        .collect()
     )
-    carry_in: dict[int, list[float] | None] = {}
-    carry: list[float] | None = None
-    for r in summaries:
-        carry_in[r["__pid"]] = list(carry) if carry is not None else None
-        if r["__has"]:
-            carry = [r[f"__v{i}"] for i in range(len(value_cols))]
+    last_of = {r["__pid"]: list(r["__v"]) for r in lasts}
+    with_last = sorted(last_of)
 
-    schema_out = T.StructType(
-        list(pinned.schema.fields)
-        + [T.StructField(c, T.DoubleType()) for c in out_cols]
+    def init(pid: int) -> list | None:
+        # carry-in: the last valid row of the nearest earlier
+        # partition that has one
+        i = bisect.bisect_left(with_last, pid)
+        return list(last_of[with_last[i - 1]]) if i else None
+
+    def step(pdf: pd.DataFrame, run: list | None) -> list | None:
+        valid = pdf[valid_col].fillna(False).astype(bool).to_numpy()
+        at = np.maximum.accumulate(np.where(valid, np.arange(len(pdf)), -1))
+        has = at >= 0
+        cols = [_values(pdf, c) for c in value_cols]
+        for i, (v, null) in enumerate(cols):
+            seed = run[i] if run is not None else None
+            fill = np.where(has, v[at], np.nan if seed is None else seed)
+            fill_null = np.where(has, null[at], seed is None)
+            pdf[out_cols[i]] = fill
+            pdf[_nan_flag(out_cols[i])] = np.isnan(fill) & ~fill_null
+        if has[-1]:
+            j = at[-1]
+            run = [None if null[j] else float(v[j]) for v, null in cols]
+        return run
+
+    return _scan_partitions(
+        pinned,
+        [T.StructField(o, T.DoubleType()) for o in out_cols],
+        init,
+        step,
     )
-
-    def ffill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        run: list[float] | None = None
-        seeded = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if not seeded:
-                run = carry_in.get(int(pdf["__pid"].iloc[0]))
-                run = list(run) if run is not None else None
-                seeded = True
-            pdf = pdf.copy()
-            valid = pdf[valid_col].fillna(False).astype(bool)
-            for i, c in enumerate(value_cols):
-                v = (
-                    pdf[c]
-                    .astype("float64")
-                    .where(valid, np.nan)
-                    .ffill()
-                )
-                if run is not None:
-                    v = v.fillna(run[i])
-                pdf[out_cols[i]] = v
-            if valid.any():
-                m = pdf[valid]
-                run = [float(m[c].iloc[-1]) for c in value_cols]
-            yield pdf
-
-    return pinned.mapInPandas(ffill, schema_out).drop("__pid")
 
 
 def sorted_neighborhood_pairs(
@@ -488,8 +570,8 @@ def deterministic_shuffle(
     under retries — a lineage recompute of a failed task would
     permute differently mid-job).
 
-    The rank is computed by ``global_row_index``'s two-phase
-    distributed sort — no single-task window anywhere. Writing the
+    The rank is ``global_row_index``'s, so a large input never sorts
+    in a single task. Writing the
     result partitioned by ``floor(shuffle_pos / shard_size)`` gives
     reproducible training shards."""
     from pipeline_dataengineer_spark.operators.sampling import portable_scramble

@@ -40,7 +40,7 @@ def pack_sequences(
     partitioning or engine.
 
     Siblings in operators/corpus.py: ``pack_concat_chunks`` (ONE
-    global stream via the two-phase cumsum, emits every doc-window
+    global stream via the global cumsum, emits every doc-window
     overlap span) and ``pack_greedy_shards`` (no-split greedy
     bins)."""
     b = portable_bucket(id_col, buckets)

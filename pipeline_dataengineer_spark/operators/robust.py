@@ -355,13 +355,12 @@ def global_exact_quantiles(
     scale answer when ``approx_percentile`` error bounds are not
     acceptable table-wide.
 
-    Plan: one columnar count, then ``global_row_index``'s two-phase
-    distributed sort on (value, a disambiguating hash) and a filter
-    to the target rank positions — each quantile is ONE row plucked
-    from the total order, so the result reaches the driver as
-    |qs| rows regardless of table size. Cost = one distributed sort;
-    compare ``operators/order.py`` for why the naive
-    ``row_number() OVER (ORDER BY ...)`` is a single-task funnel."""
+    Plan: one columnar count, then ``global_row_index`` on (value, a
+    disambiguating hash) and a filter to the target rank positions —
+    each quantile is ONE row plucked from the total order, so the
+    result reaches the driver as |qs| rows regardless of table size.
+    Cost = one sort, distributed once the input outgrows one task
+    (``operators/order.py``)."""
     from pipeline_dataengineer_spark.operators.order import global_row_index
 
     if not qs or any(not (0 < q <= 1) for q in qs):

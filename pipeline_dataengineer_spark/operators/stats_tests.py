@@ -9,17 +9,26 @@ table, no collects beyond the final statistic rows):
   tiny aggregates over cells, not over facts), expected = row·col/N,
   χ² = Σ (obs−exp)²/exp, plus Cramér's V effect size. The cell table
   is |A|×|B|-sized — the only thing that ever reaches a join.
-- **Mann-Whitney U** (two-sample rank test): ranks via ONE window
-  over the pooled values — average ranks for ties, the standard
-  tie-corrected normal approximation for z. The window is the
-  honest cost; at 100 TB swap the exact rank for a KLL-sketch rank
-  (functions/sketches.py) — documented trade, same output shape.
+- **Mann-Whitney U** (two-sample rank test): average ranks for ties
+  from a distinct-value hash aggregate and a running count over it,
+  the standard tie-corrected normal approximation for z.
+
+The ungrouped rank statistics (Mann-Whitney, KS, Spearman, Cliff's
+delta, Brunner-Munzel, BH, Holm) share one recipe: hash-aggregate to
+distinct values, then one ``operators/order.py`` scan, which sizes
+itself (one task or two phases) from the input's size estimate.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pipeline_dataengineer_spark.operators.order import (
+    global_cummin,
+    global_cumsum,
+    global_row_index,
+)
 
 
 def chi2_association(
@@ -77,60 +86,30 @@ def mann_whitney_u(
     value_col: str,
     group_a,
     group_b,
-    distributed: bool = False,
 ) -> DataFrame:
     """One row: (u_a, u_b, z, n_a, n_b) for the two-sided rank-sum
     test of ``group_a`` vs ``group_b`` values. Average ranks for
     ties; z uses the tie-corrected variance (normal approximation —
     exact tables only matter below n≈20).
 
-    ``distributed=True`` computes the identical rank sum with no
-    unkeyed window: group by distinct value (hash agg), then
-    avg_rank(v) = cum_count_before(v) + (cnt(v)+1)/2 via the
-    two-phase global cumsum (operators/order.py:global_cumsum) over
-    the distinct-value table."""
+    Group by distinct value (hash agg), then avg_rank(v) =
+    cum_count_before(v) + (cnt(v)+1)/2 via ``global_cumsum`` over the
+    distinct-value table."""
     two = df.filter(F.col(group_col).isin([group_a, group_b])).select(
         group_col, F.col(value_col).alias("__v")
     )
-    if distributed:
-        from pipeline_dataengineer_spark.operators.order import (
-            global_cumsum,
-        )
-
-        g = two.groupBy("__v").agg(
-            F.count(F.lit(1)).alias("__cnt"),
-            F.sum((F.col(group_col) == group_a).cast("long")).alias(
-                "__ca"
-            ),
-            F.sum((F.col(group_col) == group_b).cast("long")).alias(
-                "__cb"
-            ),
-        )
-        gc = global_cumsum(g, ["__v"], ["__cnt"], exclusive=True)
-        avg_r = F.col("cum___cnt") + (F.col("__cnt") + 1) / 2.0
-        agg = gc.agg(
-            F.sum(F.col("__ca") * avg_r).alias("__ra"),
-            F.sum("__ca").alias("n_a"),
-            F.sum("__cb").alias("n_b"),
-        )
-    else:
-        # average rank = (rank_first + rank_last)/2 over the pooled
-        # sort: avg(row_number) per tie class, computed without a
-        # per-row window via min_rank + (cnt-1)/2.
-        w = Window.orderBy("__v")
-        ranked = two.withColumn("__r", F.rank().over(w)).withColumn(
-            "__cnt", F.count(F.lit(1)).over(Window.partitionBy("__v"))
-        )
-        ranked = ranked.withColumn(
-            "__avg_r", F.col("__r") + (F.col("__cnt") - 1) / 2.0
-        )
-        agg = ranked.groupBy().agg(
-            F.sum(
-                F.when(F.col(group_col) == group_a, F.col("__avg_r"))
-            ).alias("__ra"),
-            F.sum((F.col(group_col) == group_a).cast("long")).alias("n_a"),
-            F.sum((F.col(group_col) == group_b).cast("long")).alias("n_b"),
-        )
+    g = two.groupBy("__v").agg(
+        F.count(F.lit(1)).alias("__cnt"),
+        F.sum((F.col(group_col) == group_a).cast("long")).alias("__ca"),
+        F.sum((F.col(group_col) == group_b).cast("long")).alias("__cb"),
+    )
+    gc = global_cumsum(g, ["__v"], ["__cnt"], exclusive=True)
+    avg_r = F.col("cum___cnt") + (F.col("__cnt") + 1) / 2.0
+    agg = gc.agg(
+        F.sum(F.col("__ca") * avg_r).alias("__ra"),
+        F.sum("__ca").alias("n_a"),
+        F.sum("__cb").alias("n_b"),
+    )
     # tie correction term Σ(c³-c) over tie CLASSES (not rows):
     ties = (
         two.groupBy("__v")
@@ -237,57 +216,27 @@ def ks_test(
     value_col: str,
     group_a,
     group_b,
-    distributed: bool = False,
 ) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov: one row (ks_stat, n_a, n_b) —
     the max gap between the two empirical CDFs, computed relationally:
-    pool both samples, ONE window over the pooled order accumulating
-    per-side running counts, max of |F_a - F_b|. Ties are handled by
-    evaluating the CDFs AFTER all equal values are absorbed (the
-    range-frame cumulative count), which is the correct ECDF value at
-    each distinct point.
-
-    Default path: the single global-order window is the honest cost
-    (same as mann_whitney_u). ``distributed=True`` replaces it with a
-    distinct-value hash agg + two-phase global cumsum — the ECDF at
-    each distinct point is the INCLUSIVE running per-side count, which
-    is exactly the range frame's ties-absorbed value; identical
-    ks_stat, no unkeyed window. (The other 100-TB option, the
-    KLL-sketch approximate CDF, stays documented at mann_whitney_u.)"""
+    pool both samples, hash-aggregate to distinct values with per-side
+    counts, and take the INCLUSIVE running per-side count at each
+    distinct value (``global_cumsum``) — the ECDF value after all
+    equal values are absorbed — then max of |F_a - F_b|. (The
+    100-TB approximate alternative, a KLL-sketch CDF, lives in
+    functions/sketches.py.)"""
     two = df.filter(F.col(group_col).isin([group_a, group_b])).select(
         F.col(group_col).alias("__g"), F.col(value_col).alias("__v")
     )
     counts = two.groupBy("__g").agg(F.count("*").alias("__n"))
-    if distributed:
-        from pipeline_dataengineer_spark.operators.order import (
-            global_cumsum,
-        )
-
-        g = two.groupBy("__v").agg(
-            F.sum((F.col("__g") == group_a).cast("long")).alias("__ia"),
-            F.sum((F.col("__g") == group_b).cast("long")).alias("__ib"),
-        )
-        cum = global_cumsum(
-            g, ["__v"], ["__ia", "__ib"], prefix="__c"
-        ).select(
-            F.col("__c__ia").alias("__ca"),
-            F.col("__c__ib").alias("__cb"),
-        )
-    else:
-        # range frame: cumulative count INCLUDING all ties at this
-        # value
-        w = Window.orderBy("__v").rangeBetween(
-            Window.unboundedPreceding, 0
-        )
-        marked = two.select(
-            "__v",
-            F.when(F.col("__g") == group_a, 1).otherwise(0).alias("__ia"),
-            F.when(F.col("__g") == group_b, 1).otherwise(0).alias("__ib"),
-        )
-        cum = marked.select(
-            F.sum("__ia").over(w).alias("__ca"),
-            F.sum("__ib").over(w).alias("__cb"),
-        )
+    g = two.groupBy("__v").agg(
+        F.sum((F.col("__g") == group_a).cast("long")).alias("__ia"),
+        F.sum((F.col("__g") == group_b).cast("long")).alias("__ib"),
+    )
+    cum = global_cumsum(g, ["__v"], ["__ia", "__ib"], prefix="__c").select(
+        F.col("__c__ia").alias("__ca"),
+        F.col("__c__ib").alias("__cb"),
+    )
     na_nb = {r["__g"]: r["__n"] for r in counts.collect()}
     na, nb = na_nb.get(group_a, 0), na_nb.get(group_b, 0)
     if na == 0 or nb == 0:
@@ -748,7 +697,6 @@ def benjamini_hochberg(
     p_col: str,
     alpha: float = 0.05,
     round_to: int = 6,
-    distributed: bool = False,
 ) -> DataFrame:
     """Benjamini-Hochberg FDR correction — the multiple-testing
     companion every grouped test in this module eventually needs
@@ -761,54 +709,22 @@ def benjamini_hochberg(
     with (rank, q_value, reject) — the full adjusted table, not just
     the cut.
 
-    Pure window algebra: one ascending rank, one descending
-    running-min — no Python, no join; ties on p break by id for
-    determinism. One sort of the hypothesis table (hypothesis count
-    is test-count-sized, not fact-sized). For genomics-scale
-    hypothesis sets where even THAT table out-sizes one task,
-    ``distributed=True`` computes the identical q-values via the
-    two-phase global row index + global running-min
-    (operators/order.py:global_row_index / global_cummin) — no
-    unkeyed window anywhere."""
+    One ascending rank (``global_row_index``) and one descending
+    running-min (``global_cummin``); ties on p break by id for
+    determinism."""
     p = F.col(p_col).cast("double")
-    if distributed:
-        from pipeline_dataengineer_spark.operators.order import (
-            global_cummin,
-            global_row_index,
-        )
-
-        base = df.select(F.col(id_col), p.alias("__p"))
-        tot = base.agg(F.count(F.lit(1)).alias("__n"))
-        step = global_row_index(
-            base, ["__p", id_col], "__rk0"
-        ).withColumn("__rk", F.col("__rk0") + 1).drop("__rk0")
-        step = step.crossJoin(F.broadcast(tot))
-        raw_q = F.col("__p") * F.col("__n") / F.col("__rk")
-        scanned = global_cummin(
-            step.withColumn("__raw", raw_q),
-            [F.col("__rk").desc()],
-            ["__raw"],
-        )
-        out = scanned.withColumn(
-            "__q", F.least(F.col("cummin___raw"), F.lit(1.0))
-        )
-    else:
-        w_rank = Window.orderBy(p.asc(), F.col(id_col).asc())
-        w_from_right = (
-            Window.orderBy(F.col("__rk").desc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        n = Window.partitionBy()
-        step = df.select(
-            F.col(id_col),
-            p.alias("__p"),
-            F.row_number().over(w_rank).alias("__rk"),
-            F.count(F.lit(1)).over(n).alias("__n"),
-        )
-        raw_q = F.col("__p") * F.col("__n") / F.col("__rk")
-        out = step.withColumn(
-            "__q", F.least(F.min(raw_q).over(w_from_right), F.lit(1.0))
-        )
+    base = df.select(F.col(id_col), p.alias("__p"))
+    tot = base.agg(F.count(F.lit(1)).alias("__n"))
+    step = global_row_index(base, ["__p", id_col], "__rk0")
+    step = step.withColumn("__rk", F.col("__rk0") + 1).drop("__rk0")
+    step = step.crossJoin(F.broadcast(tot))
+    raw_q = F.col("__p") * F.col("__n") / F.col("__rk")
+    scanned = global_cummin(
+        step.withColumn("__raw", raw_q), [F.col("__rk").desc()], ["__raw"]
+    )
+    out = scanned.withColumn(
+        "__q", F.least(F.col("cummin___raw"), F.lit(1.0))
+    )
     return out.select(
         id_col,
         F.col("__p").alias(p_col),
@@ -823,7 +739,6 @@ def spearman_rho(
     x_col: str,
     y_col: str,
     round_to: int = 6,
-    distributed: bool = False,
 ) -> DataFrame:
     """Spearman rank correlation with average-rank tie handling —
     Pearson's r computed on the two rank vectors. One row:
@@ -832,14 +747,11 @@ def spearman_rho(
 
     Ranks come from the same tie-class identity as mann_whitney_u:
     avg_rank(v) = count_below(v) + (cnt(v)+1)/2, so each column needs
-    only a distinct-value aggregate + a cumulative count — joined
-    back to the rows on the value (two hash joins over the facts).
-    Default path does the cumulative with a distinct-value window
-    (small — one row per DISTINCT value, but still a single-task sort
-    of that table); ``distributed=True`` swaps in the two-phase
-    global cumsum (operators/order.py:global_cumsum). The final rho
-    is ONE combinable aggregate over (rank_x, rank_y) — the moment
-    sums — never a row-level collect."""
+    only a distinct-value aggregate + a cumulative count
+    (``global_cumsum``) — joined back to the rows on the value (two
+    hash joins over the facts). The final rho is ONE combinable
+    aggregate over (rank_x, rank_y) — the moment sums — never a
+    row-level collect."""
     base = df.select(
         F.col(x_col).cast("double").alias("__x"),
         F.col(y_col).cast("double").alias("__y"),
@@ -847,29 +759,10 @@ def spearman_rho(
 
     def ranks(col: str, out: str):
         g = base.groupBy(col).agg(F.count(F.lit(1)).alias("__cnt"))
-        if distributed:
-            from pipeline_dataengineer_spark.operators.order import (
-                global_cumsum,
-            )
-
-            gc = global_cumsum(g, [col], ["__cnt"], exclusive=True)
-            below = F.col("cum___cnt")
-        else:
-            w = (
-                Window.orderBy(col)
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            gc = g.select(
-                col,
-                "__cnt",
-                F.coalesce(F.sum("__cnt").over(w), F.lit(0)).alias(
-                    "__below"
-                ),
-            )
-            below = F.col("__below")
+        gc = global_cumsum(g, [col], ["__cnt"], exclusive=True)
         return gc.select(
             col,
-            (below + (F.col("__cnt") + 1) / 2.0).alias(out),
+            (F.col("cum___cnt") + (F.col("__cnt") + 1) / 2.0).alias(out),
         )
 
     rx = ranks("__x", "__rx")
@@ -907,7 +800,7 @@ def grouped_spearman(
     group: (group..., rho, n). Average-rank tie handling, pairwise-
     complete NULL drop — same semantics as spearman_rho per group.
 
-    Scale-safe WITHOUT a distributed switch: every window is KEYED by
+    Scale-safe as it stands: every window is KEYED by
     the group (Window.partitionBy(group).orderBy(value) over the
     per-group DISTINCT-value table, the grouped_roc_auc shape), so no
     single-task stage exists at any group count; the final moments
@@ -961,129 +854,6 @@ def grouped_spearman(
         F.round(F.try_divide(num, den), round_to).alias("rho"),
         F.col("n").cast("long").alias("n"),
     )
-
-
-def kendall_tau_b(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    round_to: int = 6,
-    max_cells: int = 5_000,
-    distributed: bool = False,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Kendall's τ-b (tie-adjusted) over the distinct-CELL contingency
-    reduction: group rows into (x, y) cells with counts (one
-    combinable hash agg over the facts), then concordant/discordant
-    pair counts are a cell-level dominance self-join —
-    C = Σ_{c,c'} n_c n_{c'} [x'>x ∧ y'>y], D likewise with y'<y.
-    τ-b = (C − D) / √((n₀−n₁)(n₀−n₂)) with the standard tie terms
-    n₁ = Σ tᵢ(tᵢ−1)/2 over x tie classes, n₂ over y.
-
-    Cost is quadratic in DISTINCT CELLS, not rows — the right shape
-    for ordinal / bucketed / Likert data (Kendall's statistical home
-    turf). ``max_cells`` is the enforced guard: the dominance join
-    evaluates up to max_cells² cell pairs, so the default is sized to
-    keep that sub-second (5k² = 25M broadcast-NL evaluations);
-    anything larger raises instead of silently stalling (same
-    fail-loudly convention as the LSH bucket cap) — a 100k default
-    would admit 10^10 evaluations, hours of stall, which contradicts
-    the fail-loudly rationale.
-
-    For CONTINUOUS data (distinct cells ≈ rows) pass
-    ``distributed=True``: the EXACT O(n log n)-per-partition
-    inversion-counting path (`_kendall_tau_b_distributed`) — no cell
-    cap, no quadratic join, identical τ-b/C/D/n."""
-    if distributed:
-        return _kendall_tau_b_distributed(
-            df, x_col, y_col, round_to, num_partitions
-        )
-    cells = (
-        df.select(
-            F.col(x_col).cast("double").alias("__x"),
-            F.col(y_col).cast("double").alias("__y"),
-        )
-        .filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
-        .groupBy("__x", "__y")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .persist()
-    )
-    n_cells = cells.count()
-    if n_cells > max_cells:
-        cells.unpersist()
-        raise ValueError(
-            f"kendall_tau_b: {n_cells} distinct (x, y) cells exceeds "
-            f"max_cells={max_cells}; the dominance join would be "
-            "quadratic. Bucket the inputs or use spearman_rho."
-        )
-    a, b = cells.alias("a"), cells.alias("b")
-    pair = a.join(
-        b, (F.col("a.__x") < F.col("b.__x")), "inner"
-    ).agg(
-        F.sum(
-            F.when(
-                F.col("a.__y") < F.col("b.__y"),
-                F.col("a.__n") * F.col("b.__n"),
-            ).otherwise(0)
-        ).alias("__c"),
-        F.sum(
-            F.when(
-                F.col("a.__y") > F.col("b.__y"),
-                F.col("a.__n") * F.col("b.__n"),
-            ).otherwise(0)
-        ).alias("__d"),
-    )
-    ties = cells.agg(
-        F.sum("__n").alias("__n_tot"),
-        (
-            F.sum(F.col("__n") * F.col("__n"))
-        ).alias("__sum_cell_sq"),
-    )
-    tx = (
-        cells.groupBy("__x")
-        .agg(F.sum("__n").alias("__t"))
-        .agg(
-            F.sum(F.col("__t") * (F.col("__t") - 1) / 2).alias("__n1")
-        )
-    )
-    ty = (
-        cells.groupBy("__y")
-        .agg(F.sum("__n").alias("__t"))
-        .agg(
-            F.sum(F.col("__t") * (F.col("__t") - 1) / 2).alias("__n2")
-        )
-    )
-    out = (
-        pair.crossJoin(F.broadcast(ties))
-        .crossJoin(F.broadcast(tx))
-        .crossJoin(F.broadcast(ty))
-        .select(
-            F.round(
-                F.try_divide(
-                    (F.col("__c") - F.col("__d")).cast("double"),
-                    F.sqrt(
-                        (
-                            F.col("__n_tot")
-                            * (F.col("__n_tot") - 1)
-                            / 2.0
-                            - F.col("__n1")
-                        )
-                        * (
-                            F.col("__n_tot")
-                            * (F.col("__n_tot") - 1)
-                            / 2.0
-                            - F.col("__n2")
-                        )
-                    ),
-                ),
-                round_to,
-            ).alias("tau_b"),
-            F.col("__c").cast("long").alias("concordant"),
-            F.col("__d").cast("long").alias("discordant"),
-            F.col("__n_tot").cast("long").alias("n"),
-        )
-    )
-    return out
 
 
 def _count_weighted_strict_inversions(r, w):
@@ -1152,16 +922,19 @@ def _count_strict_inversions(r):
     return inv
 
 
-def _kendall_tau_b_distributed(
+def kendall_tau_b(
     df: DataFrame,
     x_col: str,
     y_col: str,
     round_to: int = 6,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Exact Kendall τ-b with NO distinct-cell cap — the continuous-
-    domain scale path (round-7; the cell-join default is quadratic in
-    distinct cells, which equals the row count for continuous data).
+    """Exact Kendall τ-b (tie-adjusted) by inversion counting — one
+    row (tau_b, concordant, discordant, n); NULL x or y rows are
+    dropped. τ-b = (C − D) / √((n₀−n₁)(n₀−n₂)) with the standard tie
+    terms n₁ = Σ tᵢ(tᵢ−1)/2 over x tie classes, n₂ over y. Cost is
+    O(n log n) per partition whatever the number of distinct (x, y)
+    cells, so ordinal and continuous data take the same path.
 
     Discordant pairs D = strict inversions of the y-sequence sorted
     by (x asc, y asc): equal-x pairs contribute nothing (ys ascend
@@ -1177,20 +950,16 @@ def _kendall_tau_b_distributed(
     - CROSS-partition pairs always have x_i < x_j strictly, so their
       count is Σ_v Σ_q cnt_q(v) · Σ_{p<q}(tot_p − cum_p(v)) over the
       DISTINCT-y table with one per-source-partition count column —
-      cum_p comes from the two-phase global_cumsum, the prefix over
-      q is a P-term column expression. No unkeyed window, no join
+      cum_p comes from global_cumsum, the prefix over q is a P-term
+      column expression. No unkeyed window over the rows, no join
       wider than the distinct-y table.
 
     C then follows from the pair identity C + D = n₀ − n₁ − n₂ + n₃
     (total minus x-ties minus y-ties plus joint ties, the standard
-    τ-b bookkeeping), so both counts are exact longs. Returns the
-    same (tau_b, concordant, discordant, n) row as the default path.
-    Count products overflow long only past ~4.3e9 rows per side —
-    the same bound the default path carries."""
+    τ-b bookkeeping), so both counts are exact longs. Count products
+    overflow long only past ~4.3e9 rows per side."""
     import pandas as pd
     from pyspark.sql import types as T
-
-    from pipeline_dataengineer_spark.operators.order import global_cumsum
 
     base = (
         df.select(
@@ -1653,7 +1422,6 @@ def cliffs_delta(
     group_a,
     group_b,
     round_to: int = 6,
-    distributed: bool = False,
 ) -> DataFrame:
     """Cliff's delta — the ordinal, distribution-free effect size
     behind Mann-Whitney:
@@ -1662,19 +1430,12 @@ def cliffs_delta(
 
     computed WITHOUT the quadratic pair space: group to distinct
     values (one combinable hash agg), then for each value v the a-rows
-    at v dominate exactly cum_b_below(v) b-rows — one cumulative pass
-    over the distinct-value table. The default path runs that pass as
-    one global-order window — fine for ordinal/bucketed domains where
-    distinct values are task-sized, but CONTINUOUS doubles make the
-    distinct table ≈ the row count and the unkeyed window a
-    single-task sort. ``distributed=True`` swaps in the two-phase
-    ``global_cumsum`` (operators/order.py) with ``exclusive=True`` —
-    bit-identical __b_below/__a_below (the distinct-value order is
-    total, so tie order cannot matter), no unkeyed window anywhere
-    (same pattern as ks_test/mann_whitney_u). Exact integer
-    numerators, one division. Returns (delta, n_gt, n_lt, n_a, n_b)
-    with the conventional reading |δ| < .147 negligible / < .33 small
-    / < .474 medium / else large."""
+    at v dominate exactly cum_b_below(v) b-rows — one exclusive
+    ``global_cumsum`` over the distinct-value table (the order is
+    total, so tie order cannot matter). Exact integer numerators, one
+    division. Returns (delta, n_gt, n_lt, n_a, n_b) with the
+    conventional reading |δ| < .147 negligible / < .33 small /
+    < .474 medium / else large."""
     two = df.filter(F.col(group_col).isin([group_a, group_b])).select(
         F.col(group_col).alias("__g"),
         F.col(value_col).cast("double").alias("__v"),
@@ -1683,37 +1444,14 @@ def cliffs_delta(
         F.sum((F.col("__g") == group_a).cast("long")).alias("__ia"),
         F.sum((F.col("__g") == group_b).cast("long")).alias("__ib"),
     )
-    if distributed:
-        from pipeline_dataengineer_spark.operators.order import (
-            global_cumsum,
-        )
-
-        cum = global_cumsum(
-            g,
-            ["__v"],
-            ["__ia", "__ib"],
-            exclusive=True,
-            prefix="__below_",
-        ).select(
-            "__ia",
-            "__ib",
-            F.col("__below___ib").alias("__b_below"),
-            F.col("__below___ia").alias("__a_below"),
-        )
-    else:
-        w_below = Window.orderBy("__v").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        cum = g.select(
-            "__ia",
-            "__ib",
-            F.coalesce(F.sum("__ib").over(w_below), F.lit(0)).alias(
-                "__b_below"
-            ),
-            F.coalesce(F.sum("__ia").over(w_below), F.lit(0)).alias(
-                "__a_below"
-            ),
-        )
+    cum = global_cumsum(
+        g, ["__v"], ["__ia", "__ib"], exclusive=True, prefix="__below_"
+    ).select(
+        "__ia",
+        "__ib",
+        F.col("__below___ib").alias("__b_below"),
+        F.col("__below___ia").alias("__a_below"),
+    )
     agg = cum.agg(
         F.sum(F.col("__ia") * F.col("__b_below")).alias("n_gt"),
         F.sum(F.col("__ib") * F.col("__a_below")).alias("n_lt"),
@@ -1749,8 +1487,8 @@ def grouped_cliffs_delta(
     (group..., delta, n_gt, n_lt, n_a, n_b). Same dominance identity
     as cliffs_delta, computed per group over the per-group
     distinct-value table with the cumulative window KEYED by the
-    group — scale-safe at any group count with no distributed switch
-    (the grouped_spearman / grouped_roc_auc shape)."""
+    group — scale-safe at any group count (the grouped_spearman /
+    grouped_roc_auc shape)."""
     two = df.filter(
         F.col(class_col).isin([group_a, group_b])
     ).select(
@@ -2341,7 +2079,6 @@ def holm_bonferroni(
     p_col: str,
     alpha: float = 0.05,
     round_to: int = 6,
-    distributed: bool = False,
 ) -> DataFrame:
     """Holm's step-down FWER correction — benjamini_hochberg's
     strict sibling when the guarantee must be family-wise (any false
@@ -2353,45 +2090,20 @@ def holm_bonferroni(
     from the right. Returns every row with (rank, adj_p, reject);
     ties on p break by id for determinism.
 
-    Same scale story as BH: one sort of the hypothesis-count-sized
-    table by default; ``distributed=True`` computes the identical
-    adjusted values with the two-phase global row index plus the
-    running max derived from the EXISTING global_cummin primitive
-    via max(x) = −cummin(−x) — no unkeyed window anywhere."""
+    Same shape as BH: ``global_row_index`` ranks, and the running max
+    is ``global_cummin`` via max(x) = −cummin(−x)."""
     p = F.col(p_col).cast("double")
     raw = F.least(
         F.lit(1.0),
         F.col("__p") * (F.col("__n") - F.col("__rk") + 1),
     )
-    if distributed:
-        from pipeline_dataengineer_spark.operators.order import (
-            global_cummin,
-            global_row_index,
-        )
-
-        base = df.select(F.col(id_col), p.alias("__p"))
-        tot = base.agg(F.count(F.lit(1)).alias("__n"))
-        step = global_row_index(
-            base, ["__p", id_col], "__rk0"
-        ).withColumn("__rk", F.col("__rk0") + 1).drop("__rk0")
-        step = step.crossJoin(F.broadcast(tot)).withColumn(
-            "__neg", -raw
-        )
-        scanned = global_cummin(step, [F.col("__rk").asc()], ["__neg"])
-        out = scanned.withColumn("__adj", -F.col("cummin___neg"))
-    else:
-        w_rank = Window.orderBy(p.asc(), F.col(id_col).asc())
-        w_from_left = Window.orderBy(F.col("__rk").asc()).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        n = Window.partitionBy()
-        step = df.select(
-            F.col(id_col),
-            p.alias("__p"),
-            F.row_number().over(w_rank).alias("__rk"),
-            F.count(F.lit(1)).over(n).alias("__n"),
-        )
-        out = step.withColumn("__adj", F.max(raw).over(w_from_left))
+    base = df.select(F.col(id_col), p.alias("__p"))
+    tot = base.agg(F.count(F.lit(1)).alias("__n"))
+    step = global_row_index(base, ["__p", id_col], "__rk0")
+    step = step.withColumn("__rk", F.col("__rk0") + 1).drop("__rk0")
+    step = step.crossJoin(F.broadcast(tot)).withColumn("__neg", -raw)
+    scanned = global_cummin(step, [F.col("__rk").asc()], ["__neg"])
+    out = scanned.withColumn("__adj", -F.col("cummin___neg"))
     return out.select(
         id_col,
         F.col("__p").alias(p_col),
@@ -2570,7 +2282,6 @@ def brunner_munzel(
     group_a,
     group_b,
     round_to: int = 6,
-    distributed: bool = False,
 ) -> DataFrame:
     """Brunner-Munzel test — the modern replacement for Mann-Whitney
     when the two groups may differ in VARIANCE or shape (MWU's
@@ -2587,91 +2298,50 @@ def brunner_munzel(
     over the two variance components. Returns one row:
     (n_a, n_b, p_hat, w_stat, df).
 
-    Engine-exact by construction: midranks and placements are
-    half-integers, so ΣP and ΣP² (the moment form of S²) are EXACT
-    doubles under any accumulation order — every cross-engine
-    difference lives in the final divisions, absorbed at round 6.
-    Default path sorts the two-group slice through unkeyed rank
-    windows (evaluation-sized). ``distributed=True`` computes the
-    IDENTICAL sums with no unkeyed window — the mann_whitney_u /
-    cliffs_delta scale recipe: hash-agg the slice down to distinct
-    values with per-group tie-class counts, then pooled and
-    per-group midranks all come from ONE two-phase exclusive
-    global_cumsum (operators/order.py) over that distinct-value
-    table; placements depend only on tie-class counts, and every
-    per-value contribution is the tie-class count times a
-    half-integer, so both paths produce bit-identical doubles —
-    while those sums stay exactly representable: per-tie-class terms
-    like ca·P² reach ~n³/4 quarter-integers, so the bit-identity
-    guarantee holds up to ~2^53/4 ≈ 2M rows per group, the same
-    bound the kendall distributed docstring states for its count
-    products; beyond it accumulation order can differ in the last
-    ulp (absorbed by the round-6 output rounding in practice)."""
+    The mann_whitney_u / cliffs_delta recipe: hash-agg the slice down
+    to distinct values with per-group tie-class counts, then pooled
+    and per-group midranks all come from ONE exclusive
+    ``global_cumsum`` over that distinct-value table; placements
+    depend only on tie-class counts. Engine-exact by construction:
+    every per-value contribution is a tie-class count times a
+    half-integer, so ΣP and ΣP² (the moment form of S²) are EXACT
+    doubles under any accumulation order while they stay exactly
+    representable — per-tie-class terms like ca·P² reach ~n³/4
+    quarter-integers, so up to ~2^53/4 ≈ 2M rows per group; beyond
+    it accumulation order can differ in the last ulp (absorbed by
+    the round-6 output rounding in practice). Every cross-engine
+    difference lives in the final divisions."""
     v = F.col(value_col).cast("double")
     two = df.filter(
         F.col(group_col).isin([group_a, group_b]) & v.isNotNull()
     ).select(F.col(group_col).alias("__g"), v.alias("__v"))
-    if distributed:
-        from pipeline_dataengineer_spark.operators.order import (
-            global_cumsum,
-        )
-
-        g = two.groupBy("__v").agg(
-            F.count(F.lit(1)).alias("__cnt"),
-            F.sum((F.col("__g") == group_a).cast("long")).alias("__ca"),
-            F.sum((F.col("__g") == group_b).cast("long")).alias("__cb"),
-        )
-        gc = global_cumsum(
-            g, ["__v"], ["__cnt", "__ca", "__cb"], exclusive=True
-        )
-        # midrank of tie class v = count_before(v) + (cnt(v)+1)/2,
-        # pooled and per group; placement = pooled − own midrank.
-        mid_pool = F.col("cum___cnt") + (F.col("__cnt") + 1) / 2.0
-        mid_a = F.col("cum___ca") + (F.col("__ca") + 1) / 2.0
-        mid_b = F.col("cum___cb") + (F.col("__cb") + 1) / 2.0
-        p_a = mid_pool - mid_a
-        p_b = mid_pool - mid_b
-        ca = F.col("__ca").cast("double")
-        cb = F.col("__cb").cast("double")
-        agg = gc.agg(
-            F.sum(ca).alias("na"),
-            F.sum(cb).alias("nb"),
-            F.sum(ca * mid_pool).alias("ra"),
-            F.sum(cb * mid_pool).alias("rb"),
-            F.sum(ca * p_a).alias("pa"),
-            F.sum(cb * p_b).alias("pb"),
-            F.sum(ca * p_a * p_a).alias("pa2"),
-            F.sum(cb * p_b * p_b).alias("pb2"),
-        )
-    else:
-        w_pool = Window.orderBy("__v")
-        w_own = Window.partitionBy("__g").orderBy("__v")
-        ranked = (
-            two.withColumn("__rp", F.rank().over(w_pool))
-            .withColumn(
-                "__cp", F.count(F.lit(1)).over(Window.partitionBy("__v"))
-            )
-            .withColumn("__ro", F.rank().over(w_own))
-            .withColumn(
-                "__co",
-                F.count(F.lit(1)).over(Window.partitionBy("__g", "__v")),
-            )
-        )
-        mid_pool = F.col("__rp") + (F.col("__cp") - 1) / 2.0
-        mid_own = F.col("__ro") + (F.col("__co") - 1) / 2.0
-        p = mid_pool - mid_own
-        is_a = (F.col("__g") == group_a).cast("double")
-        is_b = (F.col("__g") == group_b).cast("double")
-        agg = ranked.agg(
-            F.sum(is_a).alias("na"),
-            F.sum(is_b).alias("nb"),
-            F.sum(is_a * mid_pool).alias("ra"),
-            F.sum(is_b * mid_pool).alias("rb"),
-            F.sum(is_a * p).alias("pa"),
-            F.sum(is_b * p).alias("pb"),
-            F.sum(is_a * p * p).alias("pa2"),
-            F.sum(is_b * p * p).alias("pb2"),
-        )
+    g = two.groupBy("__v").agg(
+        F.count(F.lit(1)).alias("__cnt"),
+        F.sum((F.col("__g") == group_a).cast("long")).alias("__ca"),
+        F.sum((F.col("__g") == group_b).cast("long")).alias("__cb"),
+    )
+    gc = global_cumsum(
+        g, ["__v"], ["__cnt", "__ca", "__cb"], exclusive=True
+    )
+    # midrank of tie class v = count_before(v) + (cnt(v)+1)/2,
+    # pooled and per group; placement = pooled − own midrank.
+    mid_pool = F.col("cum___cnt") + (F.col("__cnt") + 1) / 2.0
+    mid_a = F.col("cum___ca") + (F.col("__ca") + 1) / 2.0
+    mid_b = F.col("cum___cb") + (F.col("__cb") + 1) / 2.0
+    p_a = mid_pool - mid_a
+    p_b = mid_pool - mid_b
+    ca = F.col("__ca").cast("double")
+    cb = F.col("__cb").cast("double")
+    agg = gc.agg(
+        F.sum(ca).alias("na"),
+        F.sum(cb).alias("nb"),
+        F.sum(ca * mid_pool).alias("ra"),
+        F.sum(cb * mid_pool).alias("rb"),
+        F.sum(ca * p_a).alias("pa"),
+        F.sum(cb * p_b).alias("pb"),
+        F.sum(ca * p_a * p_a).alias("pa2"),
+        F.sum(cb * p_b * p_b).alias("pb2"),
+    )
     na, nb = F.col("na"), F.col("nb")
     rma, rmb = F.col("ra") / na, F.col("rb") / nb
     s2a = (F.col("pa2") - F.col("pa") * F.col("pa") / na) / (na - 1)

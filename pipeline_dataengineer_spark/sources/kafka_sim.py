@@ -66,19 +66,11 @@ from pyarrow import json as pa_json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-try:  # PySpark >= 4
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        SimpleDataSourceStreamReader,
-    )
-
-    _HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - PySpark 3.x fallback
-    DataSource = object
-    DataSourceReader = object
-    SimpleDataSourceStreamReader = object
-    _HAS_DATASOURCE_API = False
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    SimpleDataSourceStreamReader,
+)
 
 KAFKA_SCAN_SCHEMA = (
     "key binary, value binary, topic string, partition int, "
@@ -230,69 +222,60 @@ def _scan(log_dir: str, topic: str, start: int, end: int | None):
             )
 
 
-if _HAS_DATASOURCE_API:
+class _LogBatchReader(DataSourceReader):
+    def __init__(self, options: dict):
+        self.log_dir = options["path"]
+        self.topic = options.get("topic", os.path.basename(options["path"]))
 
-    class _LogBatchReader(DataSourceReader):
-        def __init__(self, options: dict):
-            self.log_dir = options["path"]
-            self.topic = options.get("topic", os.path.basename(options["path"]))
+    def read(self, partition):
+        yield from _scan(self.log_dir, self.topic, 0, None)
 
-        def read(self, partition):
-            yield from _scan(self.log_dir, self.topic, 0, None)
+class _LogStreamReader(SimpleDataSourceStreamReader):
+    """Offset = global record index; committed ranges replay
+    byte-identically (the Kafka recovery contract)."""
 
-    class _LogStreamReader(SimpleDataSourceStreamReader):
-        """Offset = global record index; committed ranges replay
-        byte-identically (the Kafka recovery contract)."""
+    def __init__(self, options: dict):
+        self.log_dir = options["path"]
+        self.topic = options.get("topic", os.path.basename(options["path"]))
+        self.starting = options.get("startingOffsets", "earliest")
 
-        def __init__(self, options: dict):
-            self.log_dir = options["path"]
-            self.topic = options.get("topic", os.path.basename(options["path"]))
-            self.starting = options.get("startingOffsets", "earliest")
+    def initialOffset(self) -> dict:
+        if self.starting == "latest":
+            return {"offset": _high_water_mark(self.log_dir)}
+        return {"offset": 0}
 
-        def initialOffset(self) -> dict:
-            if self.starting == "latest":
-                return {"offset": _high_water_mark(self.log_dir)}
-            return {"offset": 0}
+    def read(self, start: dict):
+        # materialized list, not a generator: Spark's prefetch
+        # cache copies the iterator, and generators don't copy
+        batches = list(_scan(self.log_dir, self.topic, start["offset"], None))
+        if not batches:
+            return iter([]), start
+        return iter(batches), {"offset": batches[-1]["offset"][-1].as_py() + 1}
 
-        def read(self, start: dict):
-            # materialized list, not a generator: Spark's prefetch
-            # cache copies the iterator, and generators don't copy
-            batches = list(_scan(self.log_dir, self.topic, start["offset"], None))
-            if not batches:
-                return iter([]), start
-            return iter(batches), {"offset": batches[-1]["offset"][-1].as_py() + 1}
+    def readBetweenOffsets(self, start: dict, end: dict):
+        return iter(
+            list(_scan(self.log_dir, self.topic, start["offset"], end["offset"]))
+        )
 
-        def readBetweenOffsets(self, start: dict, end: dict):
-            return iter(
-                list(_scan(self.log_dir, self.topic, start["offset"], end["offset"]))
-            )
+class KafkaLogSource(DataSource):
+    """``format("kafka_log").option("path", dir)`` — batch and
+    streaming reads with Kafka's scan schema and offset
+    semantics over a local append-log."""
 
-    class KafkaLogSource(DataSource):
-        """``format("kafka_log").option("path", dir)`` — batch and
-        streaming reads with Kafka's scan schema and offset
-        semantics over a local append-log."""
+    @classmethod
+    def name(cls) -> str:
+        return "kafka_log"
 
-        @classmethod
-        def name(cls) -> str:
-            return "kafka_log"
+    def schema(self) -> str:
+        return KAFKA_SCAN_SCHEMA
 
-        def schema(self) -> str:
-            return KAFKA_SCAN_SCHEMA
+    def reader(self, schema: T.StructType) -> DataSourceReader:
+        return _LogBatchReader(self.options)
 
-        def reader(self, schema: T.StructType) -> DataSourceReader:
-            return _LogBatchReader(self.options)
-
-        def simpleStreamReader(self, schema: T.StructType):
-            return _LogStreamReader(self.options)
-
-else:  # pragma: no cover
-
-    class KafkaLogSource:  # type: ignore[no-redef]
-        pass
+    def simpleStreamReader(self, schema: T.StructType):
+        return _LogStreamReader(self.options)
 
 
 def register_kafka_log_source(spark: SparkSession) -> None:
-    """Register the loop-back topic source (PySpark 4+ only)."""
-    if not _HAS_DATASOURCE_API:
-        raise NotImplementedError("Python Data Source API requires PySpark >= 4")
+    """Register the loop-back topic source."""
     spark.dataSource.register(KafkaLogSource)

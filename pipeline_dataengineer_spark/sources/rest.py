@@ -28,20 +28,12 @@ from collections.abc import Callable, Iterator, Sequence
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-try:  # PySpark >= 4
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-        SimpleDataSourceStreamReader,
-    )
-
-    _HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - PySpark 3.x fallback
-    DataSource = object
-    DataSourceReader = object
-    InputPartition = object
-    _HAS_DATASOURCE_API = False
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    InputPartition,
+    SimpleDataSourceStreamReader,
+)
 
 MAX_LIMIT = 100  # page size (reference src/constants.py:5)
 MAX_OFFSET = 10_000  # API offset cap (reference src/constants.py:6)
@@ -93,113 +85,104 @@ def fetch_all_since(
             offset = 0
 
 
-if _HAS_DATASOURCE_API:
+class _DateSlicePartition(InputPartition):
+    def __init__(self, since: str, until: str | None):
+        self.since = since
+        self.until = until
 
-    class _DateSlicePartition(InputPartition):
-        def __init__(self, since: str, until: str | None):
-            self.since = since
-            self.until = until
+class _RestReader(DataSourceReader):
+    def __init__(self, schema: T.StructType, options: dict):
+        self.schema_ = schema
+        self.options = options
 
-    class _RestReader(DataSourceReader):
-        def __init__(self, schema: T.StructType, options: dict):
-            self.schema_ = schema
-            self.options = options
+    def partitions(self) -> Sequence[InputPartition]:
+        """One partition per date slice → parallel page fetch.
+        Slices come from the 'slices' option (JSON list of
+        [since, until) date pairs); default one slice = the
+        reference's sequential behavior."""
+        raw = self.options.get("slices")
+        since = self.options.get("since", "1970-01-01")
+        if not raw:
+            return [_DateSlicePartition(since, None)]
+        return [_DateSlicePartition(s, u) for s, u in json.loads(raw)]
 
-        def partitions(self) -> Sequence[InputPartition]:
-            """One partition per date slice → parallel page fetch.
-            Slices come from the 'slices' option (JSON list of
-            [since, until) date pairs); default one slice = the
-            reference's sequential behavior."""
-            raw = self.options.get("slices")
-            since = self.options.get("since", "1970-01-01")
-            if not raw:
-                return [_DateSlicePartition(since, None)]
-            return [_DateSlicePartition(s, u) for s, u in json.loads(raw)]
+    def read(self, partition: _DateSlicePartition) -> Iterator[tuple]:
+        fields = [f.name for f in self.schema_.fields]
+        for rec in fetch_all_since(partition.since):
+            if partition.until is not None:
+                d = rec.get("date_de_publication", "")
+                if d >= partition.until:
+                    continue
+            yield tuple(rec.get(f) for f in fields)
 
-        def read(self, partition: _DateSlicePartition) -> Iterator[tuple]:
-            fields = [f.name for f in self.schema_.fields]
-            for rec in fetch_all_since(partition.since):
-                if partition.until is not None:
-                    d = rec.get("date_de_publication", "")
-                    if d >= partition.until:
-                        continue
-                yield tuple(rec.get(f) for f in fields)
+class _RestStreamReader(SimpleDataSourceStreamReader):
+    """Incremental streaming read: the reference's watermark file
+    (A3, ``data/last_processed.json``) becomes the STREAM OFFSET —
+    checkpoint-managed, exactly-once-tracked by Spark instead of a
+    hand-rolled JSON file. Each micro-batch fetches one day's
+    pages (keyset pagination inside), and the next offset is the
+    following date; ``readBetweenOffsets`` replays a committed
+    range deterministically for recovery."""
 
-    class _RestStreamReader(SimpleDataSourceStreamReader):
-        """Incremental streaming read: the reference's watermark file
-        (A3, ``data/last_processed.json``) becomes the STREAM OFFSET —
-        checkpoint-managed, exactly-once-tracked by Spark instead of a
-        hand-rolled JSON file. Each micro-batch fetches one day's
-        pages (keyset pagination inside), and the next offset is the
-        following date; ``readBetweenOffsets`` replays a committed
-        range deterministically for recovery."""
+    def __init__(self, schema: T.StructType, options: dict):
+        self.schema_ = schema
+        self.options = options
 
-        def __init__(self, schema: T.StructType, options: dict):
-            self.schema_ = schema
-            self.options = options
+    def initialOffset(self) -> dict:
+        return {"since": self.options.get("since", "1970-01-01")}
 
-        def initialOffset(self) -> dict:
-            return {"since": self.options.get("since", "1970-01-01")}
+    def _rows_for(self, since: str) -> list[tuple]:
+        fields = [f.name for f in self.schema_.fields]
+        return [
+            tuple(rec.get(f) for f in fields)
+            for rec in fetch_all_since(since)
+        ]
 
-        def _rows_for(self, since: str) -> list[tuple]:
-            fields = [f.name for f in self.schema_.fields]
-            return [
-                tuple(rec.get(f) for f in fields)
-                for rec in fetch_all_since(since)
-            ]
+    def read(self, start: dict):
+        import datetime as dt
 
-        def read(self, start: dict):
-            import datetime as dt
+        since = start["since"]
+        until = self.options.get("until")
+        if until is not None and since >= until:
+            return iter([]), start
+        nxt = (
+            dt.date.fromisoformat(since) + dt.timedelta(days=1)
+        ).isoformat()
+        return iter(self._rows_for(since)), {"since": nxt}
 
-            since = start["since"]
-            until = self.options.get("until")
-            if until is not None and since >= until:
-                return iter([]), start
-            nxt = (
-                dt.date.fromisoformat(since) + dt.timedelta(days=1)
-            ).isoformat()
-            return iter(self._rows_for(since)), {"since": nxt}
+    def readBetweenOffsets(self, start: dict, end: dict):
+        import datetime as dt
 
-        def readBetweenOffsets(self, start: dict, end: dict):
-            import datetime as dt
+        d = dt.date.fromisoformat(start["since"])
+        stop = dt.date.fromisoformat(end["since"])
+        rows: list[tuple] = []
+        while d < stop:
+            rows.extend(self._rows_for(d.isoformat()))
+            d += dt.timedelta(days=1)
+        return iter(rows)
 
-            d = dt.date.fromisoformat(start["since"])
-            stop = dt.date.fromisoformat(end["since"])
-            rows: list[tuple] = []
-            while d < stop:
-                rows.extend(self._rows_for(d.isoformat()))
-                d += dt.timedelta(days=1)
-            return iter(rows)
+class RestPaginatedSource(DataSource):
+    """``spark.read.format("rest_paginated")`` source (batch) and
+    ``spark.readStream.format("rest_paginated")`` (incremental
+    stream with checkpointed date offsets)."""
 
-    class RestPaginatedSource(DataSource):
-        """``spark.read.format("rest_paginated")`` source (batch) and
-        ``spark.readStream.format("rest_paginated")`` (incremental
-        stream with checkpointed date offsets)."""
+    @classmethod
+    def name(cls) -> str:
+        return "rest_paginated"
 
-        @classmethod
-        def name(cls) -> str:
-            return "rest_paginated"
+    def schema(self) -> str:
+        return (
+            "reference_fiche string, date_de_publication string, "
+            "categorie_de_produit string"
+        )
 
-        def schema(self) -> str:
-            return (
-                "reference_fiche string, date_de_publication string, "
-                "categorie_de_produit string"
-            )
+    def reader(self, schema: T.StructType) -> DataSourceReader:
+        return _RestReader(schema, self.options)
 
-        def reader(self, schema: T.StructType) -> DataSourceReader:
-            return _RestReader(schema, self.options)
-
-        def simpleStreamReader(self, schema: T.StructType):
-            return _RestStreamReader(schema, self.options)
-
-else:  # pragma: no cover
-
-    class RestPaginatedSource:  # type: ignore[no-redef]
-        pass
+    def simpleStreamReader(self, schema: T.StructType):
+        return _RestStreamReader(schema, self.options)
 
 
 def register_rest_source(spark: SparkSession) -> None:
-    """Register the REST source on a session (PySpark 4+ only)."""
-    if not _HAS_DATASOURCE_API:
-        raise NotImplementedError("Python Data Source API requires PySpark >= 4")
+    """Register the REST source on a session."""
     spark.dataSource.register(RestPaginatedSource)

@@ -23,11 +23,15 @@ def test_global_row_index_is_exact_total_order(spark):
     assert vs == sorted(vs)
 
 
-def test_global_row_index_no_single_task_sort(spark):
-    # must not contain an unpartitioned Window (the scale bug)
+def test_global_row_index_no_single_task_sort(spark, monkeypatch):
+    # past the one-task size threshold (patched below this input's
+    # estimate) it must not contain an unpartitioned Window (the scale bug)
     import contextlib
     import io
 
+    from pipeline_dataengineer_spark.operators import order
+
+    monkeypatch.setattr(order, "_ONE_TASK_MAX_BYTES", -1)
     df = spark.range(100).select(F.col("id"), (F.col("id") * 7 % 13).alias("v"))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

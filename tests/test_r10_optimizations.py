@@ -3,10 +3,9 @@
 Each optimization that changed an operator's internals gets a pin
 here on exactly the equivalence argument the rewrite leaned on:
 
-- kendall distributed: the single-partition numpy kernel (taken when
-  the sized layout is one range partition — the bench-scale path)
-  must agree with the default cell-join path and the O(n²)
-  definition, including every tie regime;
+- kendall: the single-partition numpy kernel (taken when the sized
+  layout is one range partition — the bench-scale path) must agree
+  with the O(n²) definition, including every tie regime;
 - semantic_dedup: the per-coordinate pair prefilter must be lossless
   at and around the threshold (it is a necessary condition of
   cos >= t on unit vectors, so no qualifying pair may be lost);
@@ -23,10 +22,10 @@ import pytest
 
 
 def test_kendall_single_partition_kernel_matches_bruteforce(spark):
-    """distributed=True WITHOUT num_partitions sizes the layout to one
-    partition at test scale and takes the fused numpy kernel; its
-    (C, D, n, tau) must equal the default cell-join path and the
-    brute-force pair count on a fixture with x, y and joint ties."""
+    """Without num_partitions the layout sizes to one partition at
+    test scale and takes the fused numpy kernel; its (C, D, n, tau)
+    must equal the brute-force pair count and tie terms on a fixture
+    with x, y and joint ties."""
     from pipeline_dataengineer_spark.operators.stats_tests import (
         kendall_tau_b,
     )
@@ -38,19 +37,7 @@ def test_kendall_single_partition_kernel_matches_bruteforce(spark):
         rows.append((x, y))
     rows += [(5.0, 2.0)] * 5  # joint ties
     df = spark.createDataFrame(rows, "x double, y double").repartition(7)
-    base = kendall_tau_b(df, "x", "y").collect()[0]
-    fast = kendall_tau_b(df, "x", "y", distributed=True).collect()[0]
-    assert (
-        fast["concordant"],
-        fast["discordant"],
-        fast["n"],
-        fast["tau_b"],
-    ) == (
-        base["concordant"],
-        base["discordant"],
-        base["n"],
-        base["tau_b"],
-    )
+    fast = kendall_tau_b(df, "x", "y").collect()[0]
     c = d = 0
     for i in range(len(rows)):
         for j in range(i + 1, len(rows)):
@@ -60,6 +47,16 @@ def test_kendall_single_partition_kernel_matches_bruteforce(spark):
             elif s < 0:
                 d += 1
     assert (fast["concordant"], fast["discordant"]) == (c, d)
+    from collections import Counter
+
+    n = len(rows)
+    n0 = n * (n - 1) // 2
+    n1 = sum(t * (t - 1) // 2 for t in Counter(x for x, _ in rows).values())
+    n2 = sum(t * (t - 1) // 2 for t in Counter(y for _, y in rows).values())
+    assert fast["n"] == n
+    assert fast["tau_b"] == pytest.approx(
+        round((c - d) / math.sqrt((n0 - n1) * (n0 - n2)), 6), abs=1e-9
+    )
 
 
 def test_semantic_dedup_prefilter_lossless_near_threshold(spark):

@@ -31,7 +31,8 @@ def _rankdata(a):
     return ranks
 
 
-def test_spearman_matches_numpy_reference(spark):
+def test_spearman_matches_numpy_reference(spark, monkeypatch):
+    from pipeline_dataengineer_spark.operators import order
     from pipeline_dataengineer_spark.operators.stats_tests import (
         spearman_rho,
     )
@@ -40,9 +41,11 @@ def test_spearman_matches_numpy_reference(spark):
     ys = [float((i * 7) % 13) * 2 + float((i * 5) % 9) for i in range(400)]
     df = spark.createDataFrame(
         list(zip(range(400), xs, ys)), "i long, x double, y double"
-    ).repartition(7)
-    for dist in (False, True):
-        got = spearman_rho(df, "x", "y", distributed=dist).collect()[0]
+    ).repartition(7).cache()
+    df.count()  # measured cache bytes: the one-task regime first
+    for limit in (order._ONE_TASK_MAX_BYTES, -1):
+        monkeypatch.setattr(order, "_ONE_TASK_MAX_BYTES", limit)
+        got = spearman_rho(df, "x", "y").collect()[0]
         ra, rb = _rankdata(xs), _rankdata(ys)
         ref = np.corrcoef(ra, rb)[0, 1]
         assert got["rho"] == pytest.approx(round(ref, 6), abs=2e-6)
@@ -79,19 +82,6 @@ def test_kendall_tau_b_reference(spark):
     ref = (c - d) / math.sqrt((n0 - n1) * (n0 - n2))
     assert got["concordant"] == c and got["discordant"] == d
     assert got["tau_b"] == pytest.approx(round(ref, 6), abs=2e-6)
-
-
-def test_kendall_max_cells_guard(spark):
-    from pipeline_dataengineer_spark.operators.stats_tests import (
-        kendall_tau_b,
-    )
-
-    df = spark.range(100).select(
-        F.col("id").cast("double").alias("x"),
-        (F.col("id") * 2).cast("double").alias("y"),
-    )
-    with pytest.raises(ValueError, match="max_cells"):
-        kendall_tau_b(df, "x", "y", max_cells=10)
 
 
 # ------------------------------------------------------------------
@@ -806,7 +796,7 @@ def test_sample_negatives_decorrelated_and_no_self(spark):
     assert translated <= 2
 
 
-def test_effect_size_and_cliffs_delta(spark):
+def test_effect_size_and_cliffs_delta(spark, monkeypatch):
     from pipeline_dataengineer_spark.operators.stats_tests import (
         cliffs_delta,
         effect_size,
@@ -836,17 +826,20 @@ def test_effect_size_and_cliffs_delta(spark):
     assert cd["delta"] == pytest.approx(
         round((gt - lt) / (len(a) * len(b)), 6)
     )
-    # distributed path: bit parity on a multi-partition fixture
-    cdd = cliffs_delta(
-        df, "g", "v", "a", "b", distributed=True
-    ).collect()[0]
+    # forced two-phase regime: bit parity on a multi-partition fixture
+    from pipeline_dataengineer_spark.operators import order
+
+    monkeypatch.setattr(order, "_ONE_TASK_MAX_BYTES", -1)
+    cdd = cliffs_delta(df, "g", "v", "a", "b").collect()[0]
     assert tuple(cdd) == tuple(cd)
 
 
-def test_cliffs_delta_distributed_continuous(spark):
-    """Continuous domain (every value distinct) — the case the
-    unkeyed-window default cannot scale on; the distributed path must
-    match it bit-for-bit across a many-partition layout."""
+def test_cliffs_delta_distributed_continuous(spark, monkeypatch):
+    """Continuous domain (every value distinct), where the distinct
+    table is as large as the input: the one-task and the forced
+    two-phase regime (a many-partition layout) must both match the
+    brute-force pair counts."""
+    from pipeline_dataengineer_spark.operators import order
     from pipeline_dataengineer_spark.operators.stats_tests import (
         cliffs_delta,
     )
@@ -854,12 +847,18 @@ def test_cliffs_delta_distributed_continuous(spark):
     rows = [("a", float(i) * 1.37 + (i % 13) * 0.001) for i in range(400)]
     rows += [("b", float(i) * 1.11 + 20.0) for i in range(350)]
     df = spark.createDataFrame(rows, "g string, v double").repartition(11)
+    df = df.cache()
+    df.count()  # measured cache bytes: the one-task regime first
     base = cliffs_delta(df, "g", "v", "a", "b").collect()[0]
-    dist = cliffs_delta(
-        df, "g", "v", "a", "b", distributed=True
-    ).collect()[0]
+    monkeypatch.setattr(order, "_ONE_TASK_MAX_BYTES", -1)
+    dist = cliffs_delta(df, "g", "v", "a", "b").collect()[0]
     assert tuple(dist) == tuple(base)
     assert base["n_a"] == 400 and base["n_b"] == 350
+    a = [v for g, v in rows if g == "a"]
+    b = [v for g, v in rows if g == "b"]
+    gt = sum(1 for x in a for y in b if x > y)
+    lt = sum(1 for x in a for y in b if x < y)
+    assert (base["n_gt"], base["n_lt"]) == (gt, lt)
 
 
 def test_vocab_overlap_reference(spark):
@@ -889,8 +888,8 @@ def test_vocab_overlap_reference(spark):
 
 
 def test_kendall_distributed_matches_default_and_bruteforce(spark):
-    """distributed=True (inversion counting, no cell cap) must agree
-    exactly with the default cell-join path AND a brute-force pair
+    """The sized single-partition kernel and an explicit 13-partition
+    layout must agree exactly with each other AND a brute-force pair
     count, on a continuous multi-partition fixture with x ties, y
     ties, and joint ties."""
     from pipeline_dataengineer_spark.operators.stats_tests import (
@@ -906,9 +905,7 @@ def test_kendall_distributed_matches_default_and_bruteforce(spark):
     rows += [(3.0, 4.0)] * 4
     df = spark.createDataFrame(rows, "x double, y double").repartition(13)
     base = kendall_tau_b(df, "x", "y").collect()[0]
-    dist = kendall_tau_b(
-        df, "x", "y", distributed=True, num_partitions=13
-    ).collect()[0]
+    dist = kendall_tau_b(df, "x", "y", num_partitions=13).collect()[0]
     assert (
         dist["concordant"],
         dist["discordant"],
@@ -934,23 +931,20 @@ def test_kendall_distributed_matches_default_and_bruteforce(spark):
 
 
 def test_kendall_distributed_continuous_no_cap(spark):
-    """All-distinct continuous data past the default path's cell cap
-    still computes exactly (the scale case the cap forbids)."""
+    """All-distinct continuous data (as many distinct cells as rows)
+    computes exactly under any layout."""
     from pipeline_dataengineer_spark.operators.stats_tests import (
         kendall_tau_b,
     )
 
-    n = 6000  # > max_cells=5000 distinct cells
+    n = 6000
     rows = [
         (float(i) + (i % 7) * 0.01, float((i * 2654435761) % 1_000_003))
         for i in range(n)
     ]
     df = spark.createDataFrame(rows, "x double, y double").repartition(17)
-    with pytest.raises(ValueError):
-        kendall_tau_b(df, "x", "y").collect()
-    out = kendall_tau_b(
-        df, "x", "y", distributed=True, num_partitions=17
-    ).collect()[0]
+    out = kendall_tau_b(df, "x", "y", num_partitions=17).collect()[0]
+    assert kendall_tau_b(df, "x", "y").collect()[0] == out
     assert out["n"] == n
     assert out["concordant"] + out["discordant"] <= n * (n - 1) // 2
     # x is strictly increasing in i; y is a pseudo-random permutation
@@ -969,14 +963,14 @@ def test_kendall_distributed_perfect_orders(spark):
         "x double, y double",
     ).repartition(9)
     assert kendall_tau_b(
-        up, "x", "y", distributed=True, num_partitions=9
+        up, "x", "y", num_partitions=9
     ).collect()[0]["tau_b"] == 1.0
     down = spark.createDataFrame(
         [(float(i), -float(i)) for i in range(500)],
         "x double, y double",
     ).repartition(9)
     assert kendall_tau_b(
-        down, "x", "y", distributed=True, num_partitions=9
+        down, "x", "y", num_partitions=9
     ).collect()[0]["tau_b"] == -1.0
 
 
@@ -1010,9 +1004,7 @@ def test_kendall_distributed_randomized_vs_bruteforce(spark):
     )
     for rows in fixtures:
         df = spark.createDataFrame(rows, "x double, y double").repartition(11)
-        got = kendall_tau_b(
-            df, "x", "y", distributed=True, num_partitions=7
-        ).collect()[0]
+        got = kendall_tau_b(df, "x", "y", num_partitions=7).collect()[0]
         c = d = 0
         for i in range(len(rows)):
             for j in range(i + 1, len(rows)):

@@ -497,27 +497,28 @@ def test_eb_shrink_degenerate_single_group(spark):
     assert r["shrinkage"] is None and r["eb_mean"] == r["raw_mean"]
 
 
-def test_holm_bonferroni_textbook_and_dist_parity(spark):
+def test_holm_bonferroni_textbook_and_dist_parity(spark, monkeypatch):
     """Classic 4-hypothesis example: p = .01, .02, .03, .04 ->
-    adj = .04, .06, .06, .06 (running max enforces monotonicity);
-    distributed path is bit-identical."""
+    adj = .04, .06, .06, .06 (running max enforces monotonicity) in
+    the one-task and the forced two-phase regime."""
+    from pipeline_dataengineer_spark.operators import order
     from pipeline_dataengineer_spark.operators.stats_tests import (
         holm_bonferroni,
     )
 
     df = spark.createDataFrame(
         [(1, 0.01), (2, 0.02), (3, 0.03), (4, 0.04)], "hyp_id int, p double"
-    )
+    ).cache()
+    df.count()  # measured cache bytes: the one-task regime first
     want = {1: 0.04, 2: 0.06, 3: 0.06, 4: 0.06}
-    for dist in (False, True):
+    for limit in (order._ONE_TASK_MAX_BYTES, -1):
+        monkeypatch.setattr(order, "_ONE_TASK_MAX_BYTES", limit)
         out = {
             r["hyp_id"]: r
-            for r in holm_bonferroni(
-                df, "hyp_id", "p", distributed=dist
-            ).collect()
+            for r in holm_bonferroni(df, "hyp_id", "p").collect()
         }
         for h, adj in want.items():
-            assert abs(out[h]["adj_p"] - adj) < 1e-9, (dist, h, out[h])
+            assert abs(out[h]["adj_p"] - adj) < 1e-9, (limit, h, out[h])
         assert out[1]["reject"] and not out[2]["reject"]
 
 
@@ -578,7 +579,7 @@ def test_yuen_robust_to_outliers(spark):
         yuen_test(df.filter(F.col("g") == "a"), "g", "v", "a", "b")
 
 
-def test_brunner_munzel_textbook(spark):
+def test_brunner_munzel_textbook(spark, monkeypatch):
     """The Brunner-Munzel (2000) example from the scipy docs:
     W ~= 3.1375, df ~= 17.683, p_hat = 0.969."""
     from pipeline_dataengineer_spark.operators.stats_tests import (
@@ -595,19 +596,42 @@ def test_brunner_munzel_textbook(spark):
     assert abs(r["df"] - 17.682841977) < 1e-4
     # brute-forced P(X_a < X_b) + 0.5 P(=) over all 154 pairs
     assert abs(r["p_hat"] - 0.788961038961039) < 1e-6
-    # distributed path: bit parity on the same fixture
-    rd = brunner_munzel(
-        df, "g", "v", "a", "b", distributed=True
-    ).collect()[0]
+    # forced two-phase regime: bit parity on the same fixture
+    from pipeline_dataengineer_spark.operators import order
+
+    monkeypatch.setattr(order, "_ONE_TASK_MAX_BYTES", -1)
+    rd = brunner_munzel(df, "g", "v", "a", "b").collect()[0]
     assert tuple(rd) == tuple(r)
 
 
-def test_brunner_munzel_distributed_continuous(spark):
+def _brunner_munzel_reference(a, b):
+    """Brunner-Munzel from its definition with numpy midranks."""
+    import numpy as np
+
+    def midranks(v):
+        v = np.asarray(v)
+        lo = np.searchsorted(np.sort(v), v, side="left")
+        hi = np.searchsorted(np.sort(v), v, side="right")
+        return (lo + hi + 1) / 2.0
+
+    na, nb = len(a), len(b)
+    pooled = midranks(np.r_[a, b])
+    pa, pb = pooled[:na] - midranks(a), pooled[na:] - midranks(b)
+    s2a, s2b = pa.var(ddof=1), pb.var(ddof=1)
+    ra, rb = pooled[:na].mean(), pooled[na:].mean()
+    comp = na * s2a + nb * s2b
+    w = na * nb * (rb - ra) / ((na + nb) * np.sqrt(comp))
+    dof = comp**2 / ((na * s2a) ** 2 / (na - 1) + (nb * s2b) ** 2 / (nb - 1))
+    return (rb - (nb + 1) / 2.0) / na, w, dof
+
+
+def test_brunner_munzel_distributed_continuous(spark, monkeypatch):
     """Continuous domain (every value distinct) across a
-    many-partition layout — the case the unkeyed-window default
-    funnels through one task; the cumsum path must match it
-    bit-for-bit (placements are tie-class-count functions, every
-    aggregate term an exact dyadic rational)."""
+    many-partition layout: the one-task and the forced two-phase
+    regime must agree bit-for-bit (placements are tie-class-count
+    functions, every aggregate term an exact dyadic rational) and
+    match the definition."""
+    from pipeline_dataengineer_spark.operators import order
     from pipeline_dataengineer_spark.operators.stats_tests import (
         brunner_munzel,
     )
@@ -617,9 +641,16 @@ def test_brunner_munzel_distributed_continuous(spark):
     # a sprinkle of cross-group ties to exercise the midrank math
     rows += [("a", 500.5), ("b", 500.5), ("b", 500.5)]
     df = spark.createDataFrame(rows, "g string, v double").repartition(11)
+    df = df.cache()
+    df.count()  # measured cache bytes: the one-task regime first
     base = brunner_munzel(df, "g", "v", "a", "b").collect()[0]
-    dist = brunner_munzel(
-        df, "g", "v", "a", "b", distributed=True
-    ).collect()[0]
+    monkeypatch.setattr(order, "_ONE_TASK_MAX_BYTES", -1)
+    dist = brunner_munzel(df, "g", "v", "a", "b").collect()[0]
     assert tuple(dist) == tuple(base)
     assert base["n_a"] == 401 and base["n_b"] == 352
+    p_hat, w, dof = _brunner_munzel_reference(
+        [v for g, v in rows if g == "a"], [v for g, v in rows if g == "b"]
+    )
+    assert base["p_hat"] == pytest.approx(p_hat, abs=1e-6)
+    assert base["w_stat"] == pytest.approx(w, abs=1e-6)
+    assert base["df"] == pytest.approx(dof, abs=1e-5)

@@ -6,6 +6,10 @@ joins on dimensions, TakeOrderedAndProject for top-k, no
 BroadcastNestedLoopJoin where a hash join is expected. Exits non-zero
 if any expectation fails, so it can gate commits like a test.
 
+The order primitives (operators/order.py) plan a small input as one
+unkeyed window; the audit sets their size threshold below zero so every
+query is planned in the two-phase regime a 100 TB input takes.
+
 Usage: python tools/explain_audit.py [sf_dir]
 """
 
@@ -19,6 +23,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pipeline_dataengineer_spark.contract import QUERIES
+from pipeline_dataengineer_spark.operators import order
 from pipeline_dataengineer_spark.session import get_spark
 
 
@@ -617,11 +622,10 @@ EXPECTATIONS: dict[str, tuple[list[str], list[str]]] = {
     # default path's window is over the DISTINCT table only
     "q_spearman": (["HashAggregate"], ["CartesianProduct"]),
     "q_spearman_dist": (["MapInPandas", "HashAggregate"], ["Window"]),
-    # kendall: cell-sized dominance theta-join — broadcast NL over
-    # cells is the expected shape; a cartesian would mean the
-    # broadcast was lost
-    "q_kendall": (["HashAggregate", "BroadcastNestedLoopJoin"],
-                  ["CartesianProduct"]),
+    # kendall: counts are computed eagerly by inversion counting; the
+    # returned row is a literal — no window, no join (q_kendall_dist
+    # below is the same query)
+    "q_kendall": (["Scan ExistingRDD"], ["Window", "Join"]),
     "q_mann_whitney_dist": (["MapInPandas", "HashAggregate"],
                             ["Window"]),
     # ks_test collects the scalar at build time (the returned frame
@@ -837,6 +841,7 @@ def codegen_fallback_of(spark, name: str, sf_dir: str) -> str | None:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])  # optional: audit just these queries
+    order._ONE_TASK_MAX_BYTES = -1  # the scale regime, at any input size
     spark = get_spark("explain-audit")
     failures = 0
     todo = {
